@@ -345,12 +345,6 @@ def extract_png_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Testdata shim: treat utf-8 text bytes as the opaque media
-    payload (real pipelines read the binary column from parquet)."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
-
-
 def attach_image_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -483,11 +477,6 @@ def sample_frames(
 # truly parses chunks and decodes 16-bit little-endian PCM, and the
 # DuckDB oracle recomputes the audio statistics analytically — a wrong
 # chunk walk, wrong endianness, or wrong sample width fails the hash.
-
-AUDIO_FEATURE_SCHEMA = (
-    "doc_id long, sample_rate int, n_samples int, decode_ok boolean, "
-    "rms double, zero_crossings int, peak int"
-)
 
 
 def encode_wav(sample_rate: int, samples: list[int]) -> bytes:

@@ -117,17 +117,6 @@ def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return out
 
 
-def srp_buckets(vec: Column, n_tables: int, n_planes: int, dim: int) -> Column:
-    """Array of per-table SRP bucket ids (one independent plane family
-    per table)."""
-    return F.array(
-        *[
-            srp_bucket(vec, pseudo_planes(n_planes, dim, table=t))
-            for t in range(n_tables)
-        ]
-    )
-
-
 def srp_lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,

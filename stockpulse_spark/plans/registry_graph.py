@@ -25,6 +25,14 @@ _UNIT = 1_000_000_000_000  # rank mass scale: 1.0 == 1e12 units
 _TELEPORT = 150_000_000_000  # 0.15 * _UNIT
 
 
+def _fits_broadcast(spark: SparkSession, est_bytes: float) -> bool:
+    """Whether a footer-estimated build side fits the session's
+    autoBroadcastJoinThreshold; a threshold <= 0 (broadcast disabled)
+    or a missing estimate takes the shuffled branch."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return 0 < est_bytes <= conf.autoBroadcastJoinThreshold()
+
+
 @_register(
     "copurchase_pagerank",
     oracle=f"""
@@ -123,7 +131,7 @@ def q_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unrolled steps — unpinned, each use re-aggregated the edge RDD.
     # The rank/degree vectors are |nodes|-sized (bounded by the part
     # catalog); broadcast them into the per-step joins when the
-    # parquet-footer cardinality says they fit the session's 64 MB
+    # parquet-footer cardinality says they fit the session's broadcast
     # threshold (checkpointed RDDs carry no stats, so AQE cannot make
     # this call itself) — interleaved A/B at sf0.1: 2.37 -> 1.84 s.
     # Above the threshold the joins stay shuffled, the 100 TB shape.
@@ -132,7 +140,7 @@ def q_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_parts = footer_row_count(sf_dir, "part") or footer_row_count(
         sf_dir, "lineitem"
     ) or 0
-    small_nodes = 0 < n_parts * 48 / 1e6 <= 64
+    small_nodes = _fits_broadcast(spark, n_parts * 48)
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("outdeg"))
@@ -311,15 +319,15 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width ladder and the SRP plane count already use): the edge list
     # measures ~2 rows per lineitem row at every tier, ~24 B per hash-
     # relation entry — broadcast the closing/wedge sides only when
-    # that estimate fits the session's 64 MB auto-broadcast threshold
-    # (it does through the 10x tier); above it, fall back to a
-    # shuffled-hash join (guide §3.1 — the wedge stream is the big
-    # probe side, never the build side), which is the 100 TB-safe
-    # shape an |E|-sized frame requires.
+    # that estimate fits the session's auto-broadcast threshold (the
+    # 64m default holds it through the 10x tier); above it, or with
+    # broadcast disabled, fall back to a shuffled-hash join (guide
+    # §3.1 — the wedge stream is the big probe side, never the build
+    # side), which is the 100 TB-safe shape an |E|-sized frame requires.
     from stockpulse_spark.sources.tables import footer_row_count
 
-    est_edge_mb = (footer_row_count(sf_dir, "lineitem") or 0) * 2 * 24 / 1e6
-    small_edges = 0 < est_edge_mb <= 64
+    est_edge_bytes = (footer_row_count(sf_dir, "lineitem") or 0) * 2 * 24
+    small_edges = _fits_broadcast(spark, est_edge_bytes)
     oriented = ed.select(
         F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("src"),
         F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("dst"),

@@ -49,16 +49,6 @@ def _d_pcos(a: str, b: str, d: str) -> str:
     )
 
 
-def _s_pcos(a: str, b: str, d: str) -> F.Column:
-    dot_ab = _S_PDOT.format(a=a, b=b, d=d)
-    dot_aa = _S_PDOT.format(a=a, b=a, d=d)
-    dot_bb = _S_PDOT.format(a=b, b=b, d=d)
-    return F.expr(
-        f"{dot_ab} / (sqrt(nullif({dot_aa}, 0D))"
-        f" * sqrt(nullif({dot_bb}, 0D)))"
-    )
-
-
 def _truncation_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpinned top-k per (query, d) — split out so the plan-shape
     test can assert the broadcast/cartesian structure that the

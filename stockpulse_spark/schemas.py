@@ -58,11 +58,6 @@ STREAM_MESSAGE = T.StructType(
     ]
 )
 
-# raw Alpha-Vantage-shaped API payload (stocks_pipeline.py:138-139):
-# {"Time Series (5min)": {ts: {"1. open": "...", ...}}} — values are
-# STRINGS with numbered-key prefixes; parsed by sources/rest_replay.py
-API_BAR_FIELDS = ["1. open", "2. high", "3. low", "4. close", "5. volume"]
-
 # driver testdata tables (TESTDATA.md)
 TESTDATA_TABLES = (
     "region",

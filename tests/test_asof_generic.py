@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stockpulse_spark.operators.asof import asof_join
+from tests.conftest import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -123,7 +124,7 @@ def test_nearest_single_sort_plan(spark):
         on=["k"], left_ts="ts", right_ts="ts2",
         payload_cols=["v"], direction="nearest",
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, out)
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("Sort ") + plan.count("Sort\n") <= 2  # one sort op (may print twice in AQE reuse)
 

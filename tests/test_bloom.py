@@ -13,7 +13,7 @@ from stockpulse_spark.operators.bloom import (
     bloom_semi_join,
 )
 from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, executed_plan
 
 
 def test_bloom_semi_join_equals_plain_semi_join(spark):
@@ -63,7 +63,7 @@ def test_bloom_bitset_is_compact(spark):
 
 def test_bloom_query_plan_shape(spark):
     df = REGISTRY["bloom_prefilter_semi_join"].builder(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, df)
     # the bit-test pre-filter stays in codegen: forall compiles to
     # xxhash64/bit_get expressions, never a Python UDF
     assert "xxhash64" in plan

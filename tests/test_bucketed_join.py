@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from stockpulse_spark.sources.sinks import bucket_fact_tables
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, executed_plan
 
 
 def test_bucketed_join_is_shuffle_free(spark):
@@ -25,7 +25,7 @@ def test_bucketed_join_is_shuffle_free(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(spark, joined)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         # the join inputs read co-located buckets directly — no
         # exchange on either join key (only the final tiny agg shuffles)

@@ -12,7 +12,7 @@ import re
 from pyspark.sql import functions as F
 
 from stockpulse_spark.sources.tables import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, executed_plan
 
 
 def test_dpp_kicks_in_on_partitioned_fact(spark, tmp_path):
@@ -41,7 +41,7 @@ def test_dpp_kicks_in_on_partitioned_fact(spark, tmp_path):
         .groupBy("o_year")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, joined)
     assert "dynamicpruning" in plan.lower(), plan[:2000]
 
     rows = joined.collect()
@@ -61,7 +61,7 @@ def test_static_partition_pruning_on_filter(spark, tmp_path):
     fact = spark.read.parquet(fact_path)
     y = fact.select(F.min("o_year")).first()[0]
     q = fact.filter(F.col("o_year") == y)
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, q)
     # the o_year equality must appear inside the scan's PartitionFilters
     # clause specifically — matching the literal anywhere in the plan
     # would be vacuous (the Filter node always carries it)

@@ -138,6 +138,9 @@ def test_cli_accepts_both_jobs_forms():
     assert eq.sf_dir == sp.sf_dir == "/tmp/sf"
     assert eq.names == sp.names == ["q1", "q2"]
     assert parse_args([]).jobs == 4
+    # --reps repeats each compare; the default single rep is the plain sweep
+    assert parse_args([]).reps == 1
+    assert parse_args(["--reps", "5", "/tmp/sf", "q1"]).reps == 5
     # unknown flags must error, not be filtered
     with pytest.raises(SystemExit):
         parse_args(["--jbos=8"])

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from stockpulse_spark.llmdata.pii import add_pii_columns
+from tests.conftest import executed_plan
 
 
 def _run(spark, texts):
@@ -61,5 +62,5 @@ def test_phone_ssn_patterns_disjoint(spark):
 def test_redaction_is_jvm_side(spark):
     # the operator must stay a Column expression (no Python UDF node)
     df = spark.createDataFrame([(1, "a@b.co")], ["doc_id", "text"])
-    plan = add_pii_columns(df, "text")._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, add_pii_columns(df, "text"))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

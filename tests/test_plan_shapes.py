@@ -7,14 +7,10 @@ but regresses 100× at scale; these tests pin the plan shape."""
 
 from __future__ import annotations
 
+import pytest
 
 from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _plan(spark, name: str) -> str:
-    df = REGISTRY[name].builder(spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import SF_DIR, executed_plan
 
 
 #: one plan-string build per registry query, shared by the three
@@ -27,12 +23,12 @@ _PLAN_CACHE: dict[str, str] = {}
 def _all_plans(spark) -> dict[str, str]:
     if not _PLAN_CACHE:
         for name in REGISTRY:
-            _PLAN_CACHE[name] = _plan(spark, name)
+            _PLAN_CACHE[name] = executed_plan(spark, name)
     return _PLAN_CACHE
 
 
 def test_pricing_summary_pushdown_and_pruning(spark):
-    plan = _plan(spark, "pricing_summary")
+    plan = executed_plan(spark, "pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # 7-column projection reaches the scan (no full-row read)
     assert "l_comment" not in plan
@@ -40,18 +36,18 @@ def test_pricing_summary_pushdown_and_pruning(spark):
 
 
 def test_revenue_by_nation_broadcasts_dims(spark):
-    plan = _plan(spark, "revenue_by_nation")
+    plan = executed_plan(spark, "revenue_by_nation")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_eod_join_broadcasts(spark):
-    plan = _plan(spark, "eod_ma5_join")
+    plan = executed_plan(spark, "eod_ma5_join")
     assert "BroadcastHashJoin" in plan
 
 
 def test_topk_uses_take_ordered(spark):
-    plan = _plan(spark, "global_sort_topk")
+    plan = executed_plan(spark, "global_sort_topk")
     assert "TakeOrderedAndProject" in plan
     # a global Sort of all rows would be the scale bug
     assert plan.count("Sort ") <= 1
@@ -60,7 +56,7 @@ def test_topk_uses_take_ordered(spark):
 def test_ma5_cma_shares_one_window_exchange(spark):
     """Both window columns share partitioning → exactly one hashpartitioning
     exchange over (user_id, date)."""
-    plan = _plan(spark, "ma5_cma")
+    plan = executed_plan(spark, "ma5_cma")
     assert plan.count("Exchange hashpartitioning") == 1
 
 
@@ -75,13 +71,13 @@ def test_indicator_panel_shares_exchanges(spark):
     per-group partial states, which is the side that matters at
     100 TB. Pinned so an ACCIDENTAL extra exchange or sort still
     fails."""
-    plan = _plan(spark, "indicator_panel")
+    plan = executed_plan(spark, "indicator_panel")
     assert plan.count("Exchange hashpartitioning") == 2
     assert plan.count("Sort ") == 3
 
 
 def test_anti_join_is_hash_not_loop(spark):
-    plan = _plan(spark, "new_keys_anti_join")
+    plan = executed_plan(spark, "new_keys_anti_join")
     assert "LeftAnti" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -126,7 +122,7 @@ def test_no_python_udfs_in_relational_queries(spark):
 def test_macd_auto_dispatch_bounded_picks_hof(spark):
     """On bounded series (max ≈ 700 points here) the probe must choose
     the JVM `aggregate` fold — no Python in the plan."""
-    plan = _plan(spark, "macd_12_26_9")
+    plan = executed_plan(spark, "macd_12_26_9")
     assert "FlatMapGroupsInPandas" not in plan
     assert "collect_list" in plan
 
@@ -149,7 +145,7 @@ def test_macd_auto_dispatch_long_series_picks_kernel(spark):
         )
     )
     out = add_macd_auto(df, ["user_id"], ["seq"])
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, out)
     # r11 kernel shape: one MapInPandas pass over JVM-collected series
     # arrays (linear ndarray loop); the O(n²) HOF fold's array_append
     # must NOT appear on a long-history plan
@@ -160,7 +156,7 @@ def test_macd_auto_dispatch_long_series_picks_kernel(spark):
 
 def test_macd_forced_kernel_is_linear(spark):
     """The explicit unbounded path always uses the linear kernel."""
-    plan = _plan(spark, "macd_unbounded_kernel")
+    plan = executed_plan(spark, "macd_unbounded_kernel")
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan
     assert "array_append" not in plan
@@ -169,7 +165,7 @@ def test_macd_forced_kernel_is_linear(spark):
 def test_doc_chunking_is_narrow(spark):
     """Chunking is explode+slice only — a shuffle here would be a
     regression that costs a full repartition of the corpus at scale."""
-    plan = _plan(spark, "doc_chunking")
+    plan = executed_plan(spark, "doc_chunking")
     assert "Exchange" not in plan
 
 
@@ -179,7 +175,7 @@ def test_pack_sequences_grouped_prefix_shape(spark):
     window over the checkpoint-pinned range partitioning plus the
     broadcast offsets join; the old per-source window (parallelism
     capped at |sources|) must be gone."""
-    plan = _plan(spark, "doc_pack_sequences")
+    plan = executed_plan(spark, "doc_pack_sequences")
     assert "__pid" in plan  # grouped prefix machinery engaged
     assert "BroadcastHashJoin" in plan  # offsets join back
     # 3 hash exchanges, all over the checkpoint-pinned frame: the
@@ -190,7 +186,7 @@ def test_pack_sequences_grouped_prefix_shape(spark):
 
 
 def test_q5_join_tree_broadcasts_dims(spark):
-    plan = _plan(spark, "local_supplier_revenue")
+    plan = executed_plan(spark, "local_supplier_revenue")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -199,7 +195,7 @@ def test_q5_join_tree_broadcasts_dims(spark):
 def test_cube_is_one_expand_one_shuffle(spark):
     """CUBE must plan as Expand feeding ONE partial-agg shuffle, not
     four separate scans."""
-    plan = _plan(spark, "cube_order_stats")
+    plan = executed_plan(spark, "cube_order_stats")
     assert "Expand" in plan
     assert plan.count("Exchange hashpartitioning") == 1
 
@@ -208,7 +204,7 @@ def test_min_cost_supplier_broadcasts_all_dims(spark):
     """Q2 shape: the only hash shuffle is the (part, supplier) cost
     pre-agg + its window top-1; part/supplier/nation/region all
     broadcast."""
-    plan = _plan(spark, "min_cost_supplier")
+    plan = executed_plan(spark, "min_cost_supplier")
     assert plan.count("BroadcastHashJoin") >= 4
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -217,7 +213,7 @@ def test_min_cost_supplier_broadcasts_all_dims(spark):
 def test_important_parts_single_fact_scan(spark):
     """Q11 shape: the fact table is scanned once; the global-scalar
     cut joins back as a broadcast, never a shuffle join."""
-    plan = _plan(spark, "important_parts")
+    plan = executed_plan(spark, "important_parts")
     assert plan.count("Scan parquet") <= 3  # lineitem + 2 broadcast dims
     assert "SortMergeJoin" not in plan
 
@@ -225,7 +221,7 @@ def test_important_parts_single_fact_scan(spark):
 def test_top_supplier_revenue_pushes_date_filter(spark):
     """Q15 shape: the quarter filter reaches the parquet scan and the
     max-revenue scalar broadcasts back against the revenue view."""
-    plan = _plan(spark, "top_supplier_revenue")
+    plan = executed_plan(spark, "top_supplier_revenue")
     assert "PushedFilters" in plan and "l_shipdate" in plan.split("PushedFilters", 1)[1][:200]
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
@@ -233,7 +229,7 @@ def test_top_supplier_revenue_pushes_date_filter(spark):
 def test_grouping_sets_one_expand_one_shuffle(spark):
     """GROUPING SETS must plan like CUBE: Expand feeding ONE
     partial-agg shuffle, not one scan per grouping level."""
-    plan = _plan(spark, "grouping_sets_revenue")
+    plan = executed_plan(spark, "grouping_sets_revenue")
     assert "Expand" in plan
     assert plan.count("Scan parquet") == 1
     assert plan.count("Exchange hashpartitioning") == 1
@@ -242,7 +238,7 @@ def test_grouping_sets_one_expand_one_shuffle(spark):
 def test_unpivot_is_narrow_expand(spark):
     """UNPIVOT plans as Expand in the scan's own stage — a melt that
     shuffled or unioned four scans would be the scale bug."""
-    plan = _plan(spark, "unpivot_ohlc")
+    plan = executed_plan(spark, "unpivot_ohlc")
     assert "Expand" in plan
     assert plan.count("Scan parquet") == 1
 
@@ -250,7 +246,7 @@ def test_unpivot_is_narrow_expand(spark):
 def test_nation_market_share_no_cartesian_single_agg(spark):
     """Q8 shape: share computed in ONE aggregation pass (conditional
     sum), dims broadcast, never a cartesian."""
-    plan = _plan(spark, "nation_market_share")
+    plan = executed_plan(spark, "nation_market_share")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     # 8 scans: fact + 6 dims with nation under two roles — the share
@@ -261,7 +257,7 @@ def test_nation_market_share_no_cartesian_single_agg(spark):
 def test_copurchase_pairs_is_equi_join(spark):
     """Market-basket self-join must ride the order-key equi-join —
     an accidental cross join here is the classic quadratic bug."""
-    plan = _plan(spark, "copurchase_pairs")
+    plan = executed_plan(spark, "copurchase_pairs")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "TakeOrderedAndProject" in plan  # top-20, never global sort
@@ -270,7 +266,7 @@ def test_copurchase_pairs_is_equi_join(spark):
 def test_attribution_rides_user_equi_join(spark):
     """The interval predicate must be a post-condition on a user_id
     hash join, not a nested-loop range join."""
-    plan = _plan(spark, "purchase_attribution_batch")
+    plan = executed_plan(spark, "purchase_attribution_batch")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -278,7 +274,7 @@ def test_attribution_rides_user_equi_join(spark):
 def test_sliding_7d_bounded_fanout_shape(spark):
     """The WAU rewrite must explode AFTER the (user, day) dedup — the
     explode feeding from an aggregate, never from the raw scan."""
-    plan = _plan(spark, "sliding_7d_active_users")
+    plan = executed_plan(spark, "sliding_7d_active_users")
     assert "Generate explode" in plan
     assert "CartesianProduct" not in plan
 
@@ -286,7 +282,7 @@ def test_sliding_7d_bounded_fanout_shape(spark):
 def test_zorder_stats_stays_in_codegen(spark):
     """The Morton interleave must be plain integer expressions inside
     codegen — no UDF, no python."""
-    plan = _plan(spark, "zorder_clustering_stats")
+    plan = executed_plan(spark, "zorder_clustering_stats")
     assert "BatchEvalPython" not in plan
     assert "FlatMapGroupsInPandas" not in plan
 
@@ -302,13 +298,13 @@ def test_tpch5_joins_broadcast_no_cartesian(spark):
         "promo_revenue_monthly",
         "supplier_count_by_part",
     ):
-        plan = _plan(spark, name)
+        plan = executed_plan(spark, name)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_shipping_priority_topk_and_pushdown(spark):
-    plan = _plan(spark, "shipping_priority")
+    plan = executed_plan(spark, "shipping_priority")
     assert "TakeOrderedAndProject" in plan
     # per-side date filters reach both parquet scans
     assert plan.count("PushedFilters: [IsNotNull(") >= 2
@@ -320,7 +316,7 @@ def test_risk_windows_share_user_partitioning(spark):
     bars groupBy + window). 3 sorts: window + the two
     SortAggregate-side sorts from the tie-broken positional aggs
     (see test_indicator_panel_shares_exchanges)."""
-    plan = _plan(spark, "rolling_skew_kurt20")
+    plan = executed_plan(spark, "rolling_skew_kurt20")
     assert plan.count("Exchange hashpartitioning") == 2
     assert plan.count("Sort ") == 3
 
@@ -329,13 +325,13 @@ def test_pii_operators_stay_jvm_side(spark):
     """Regex detection/redaction must be Column expressions, not
     Python UDFs — the 100 TB scrub runs at scan throughput."""
     for name in ("pii_source_report", "pii_redaction_audit"):
-        plan = _plan(spark, name)
+        plan = executed_plan(spark, name)
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
 
 
 def test_knn_broadcasts_query_side(spark):
-    plan = _plan(spark, "embedding_knn_classify")
+    plan = executed_plan(spark, "embedding_knn_classify")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     # the corpus side must NOT shuffle before scoring
     assert "CartesianProduct" not in plan
@@ -344,14 +340,14 @@ def test_knn_broadcasts_query_side(spark):
 def test_table_profile_is_single_scan(spark):
     """One wide aggregate + stack unpivot — the orders parquet appears
     exactly once in the plan."""
-    plan = _plan(spark, "table_profile_orders")
+    plan = executed_plan(spark, "table_profile_orders")
     assert plan.count("orders.parquet") == 1
 
 
 def test_interpolation_shares_one_series_sort(spark):
     """All four IGNORE-NULLS bound lookups (prev/next value and ts)
     ride ONE exchange + sort on user_id."""
-    plan = _plan(spark, "interpolate_linear_gaps")
+    plan = executed_plan(spark, "interpolate_linear_gaps")
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("Sort ") == 1
 
@@ -359,7 +355,7 @@ def test_interpolation_shares_one_series_sort(spark):
 def test_cdc_diff_is_single_pass_per_snapshot(spark):
     """The FULL OUTER join reads orders twice (once per snapshot
     derivation) and never degenerates to a loop join."""
-    plan = _plan(spark, "snapshot_diff_cdc")
+    plan = executed_plan(spark, "snapshot_diff_cdc")
     assert plan.count("Scan parquet") == 2
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -368,7 +364,7 @@ def test_cdc_diff_is_single_pass_per_snapshot(spark):
 def test_novelty_first_seen_single_gram_shuffle(spark):
     """first-seen is min(doc_id) per gram: the gram table shuffles on
     the gram key; no all-pairs comparison anywhere."""
-    plan = _plan(spark, "doc_ngram_novelty")
+    plan = executed_plan(spark, "doc_ngram_novelty")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -382,7 +378,7 @@ def test_bpe_pairs_one_shuffle_topk(spark):
     The only SinglePartition exchange left feeds the |partitions|-row
     __pid offsets frame, and the rank machinery's range exchange sits
     behind its checkpoint boundary."""
-    plan = _plan(spark, "bpe_first_merge_stats")
+    plan = executed_plan(spark, "bpe_first_merge_stats")
     assert plan.count("Exchange hashpartitioning") <= 2
     assert "__pid" in plan  # prefix-sum rank machinery engaged
     assert plan.count("Exchange SinglePartition") <= 1
@@ -393,7 +389,7 @@ def test_theil_sen_single_exchange(spark):
     exchange (daily rollup + collect share the user_id partitioning)
     and no second shuffle for a median aggregation — the shape that
     measured ~2x at 10x data (the exploded-median form measured 16x)."""
-    plan = _plan(spark, "theil_sen_trend")
+    plan = executed_plan(spark, "theil_sen_trend")
     assert plan.count("Exchange hashpartitioning") <= 2
     assert "CartesianProduct" not in plan
 
@@ -402,7 +398,7 @@ def test_dtw_broadcasts_reference(spark):
     """The reference series is a 1-row broadcast; per-user series
     collect is the only data shuffle. The DP fold must stay JVM-side
     (no Python evaluation nodes)."""
-    plan = _plan(spark, "dtw_to_reference")
+    plan = executed_plan(spark, "dtw_to_reference")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -411,7 +407,7 @@ def test_auc_rank_has_no_single_partition_window(spark):
     """The global rank must NOT be a single-partition window: no
     'Exchange SinglePartition' feeding a Window node (the range
     repartition + prefix-sum offsets replace it)."""
-    plan = _plan(spark, "score_auc_rank")
+    plan = executed_plan(spark, "score_auc_rank")
     assert "Exchange rangepartitioning" in plan
     import re
 
@@ -425,7 +421,7 @@ def test_auc_rank_has_no_single_partition_window(spark):
 def test_mergeable_rollup_two_aggregations_one_scan(spark):
     """Daily partials then weekly merge: exactly the two-level
     aggregate with ONE scan of the fact table."""
-    plan = _plan(spark, "mergeable_weekly_rollup")
+    plan = executed_plan(spark, "mergeable_weekly_rollup")
     assert plan.count("Scan parquet") == 1
     assert plan.count("Exchange hashpartitioning") <= 2
 
@@ -434,7 +430,7 @@ def test_dq_suite_single_scan_for_row_rules(spark):
     """The five row-level rules fold into one Aggregate; only the FK
     rule adds a second scan of orders (anti-join probe). Total orders
     scans must be exactly 2, customer 1."""
-    plan = _plan(spark, "dq_expectation_suite")
+    plan = executed_plan(spark, "dq_expectation_suite")
     assert plan.count("orders.parquet") <= 2
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
@@ -443,7 +439,7 @@ def test_recall_eval_has_no_cartesian(spark):
     """The LSH recall evaluation joins on shingle / band-bucket /
     pair-id keys throughout — an accidental cross join on either the
     truth or candidate side would be the quadratic scale bug."""
-    plan = _plan(spark, "minhash_lsh_recall_eval")
+    plan = executed_plan(spark, "minhash_lsh_recall_eval")
     assert "CartesianProduct" not in plan
 
 
@@ -452,7 +448,7 @@ def test_ann_recall_eval_broadcasts_query_side(spark):
     cross join against a broadcast scalar side is the deliberate
     brute-force pattern); the approx side must join on (table, bucket)
     — no unbroadcast cartesian anywhere."""
-    plan = _plan(spark, "ann_recall_eval")
+    plan = executed_plan(spark, "ann_recall_eval")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -614,7 +610,7 @@ def test_single_partition_window_detector_negative_control(spark):
         F.col("id"),
         F.avg("id").over(Window.orderBy("id")).alias("bad_global_avg"),
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, df)
     assert _single_partition_window_violations(plan), plan
     # and the clean shape stays clean
     ok = spark.range(100).select(
@@ -624,7 +620,7 @@ def test_single_partition_window_detector_negative_control(spark):
         .alias("grouped_avg"),
     )
     assert not _single_partition_window_violations(
-        ok._jdf.queryExecution().executedPlan().toString()
+        executed_plan(spark, ok)
     )
 
 
@@ -639,13 +635,13 @@ def test_duplicated_window_aggregate_detector_negative_control(spark):
         (F.avg("id").over(w)).alias("a"),
         (F.avg("id").over(w) * 2).alias("b"),
     )
-    plan = bad._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, bad)
     assert _duplicated_window_aggregate_violations(plan), plan
     good = spark.range(100).select(
         F.avg("id").over(w).alias("a")
     ).select("a", (F.col("a") * 2).alias("b"))
     assert not _duplicated_window_aggregate_violations(
-        good._jdf.queryExecution().executedPlan().toString()
+        executed_plan(spark, good)
     )
 
 
@@ -819,7 +815,7 @@ def test_vocab_broadcast_detector_negative_control(spark):
 def test_revenue_concentration_rank_is_distributed(spark):
     """The customer-grain rank must ride the range-partitioned
     prefix-sum machinery, never a single-task sort."""
-    plan = _plan(spark, "revenue_concentration")
+    plan = executed_plan(spark, "revenue_concentration")
     assert "Exchange rangepartitioning" in plan
 
 
@@ -828,7 +824,7 @@ def test_rfm_rank_is_distributed(spark):
     sit behind checkpoint boundaries, so the visible plan shows the
     outermost: a __pid-partitioned row_number, never an ntile over an
     unpartitioned window) + closed-form ntile arithmetic."""
-    plan = _plan(spark, "rfm_segmentation")
+    plan = executed_plan(spark, "rfm_segmentation")
     assert "ntile" not in plan  # closed-form arithmetic replaced it
     assert "__pid" in plan  # rank machinery engaged
 
@@ -836,14 +832,14 @@ def test_rfm_rank_is_distributed(spark):
 def test_corpus_top_terms_take_ordered(spark):
     """Top-20 terms must plan as TakeOrderedAndProject (per-task
     heaps), not a global row_number sort of the term vocabulary."""
-    plan = _plan(spark, "corpus_top_terms")
+    plan = executed_plan(spark, "corpus_top_terms")
     assert "TakeOrderedAndProject" in plan
 
 
 def test_liquid_prune_take_ordered(spark):
     """pairwise_return_corr's top-100 activity prune must be a
     TakeOrdered, not a global row_number over every user."""
-    plan = _plan(spark, "pairwise_return_corr")
+    plan = executed_plan(spark, "pairwise_return_corr")
     assert "TakeOrderedAndProject" in plan
 
 
@@ -851,5 +847,44 @@ def test_shard_assignment_single_shuffle(spark):
     """One partial-agg exchange on the shard key; the 16-row balance
     window is post-aggregation (driver-scale, single partition is
     correct there)."""
-    plan = _plan(spark, "shard_assignment_balance")
+    plan = executed_plan(spark, "shard_assignment_balance")
     assert plan.count("Exchange hashpartitioning") == 1
+
+
+# The graph footer gates broadcast a side only when its estimate fits
+# the session's autoBroadcastJoinThreshold. At sf0.001 the node side
+# estimates 200 parts x 48 B = 9.6 kB, the edge side 6,000 lineitem
+# rows x 2 x 24 B = 288 kB.
+
+
+def _plan_at_threshold(spark, name: str, threshold: str) -> str:
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, threshold)
+    try:
+        return executed_plan(spark, name)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_pagerank_node_gate_broadcasts_at_default(spark):
+    assert "BroadcastHashJoin" in executed_plan(spark, "copurchase_pagerank")
+
+
+@pytest.mark.parametrize("threshold", ["8k", "-1"])
+def test_pagerank_node_gate_shuffles_below_threshold(spark, threshold):
+    plan = _plan_at_threshold(spark, "copurchase_pagerank", threshold)
+    assert "BroadcastHashJoin" not in plan
+
+
+def test_triangles_edge_gate_broadcasts_at_default(spark):
+    plan = executed_plan(spark, "copurchase_triangles")
+    assert "BroadcastHashJoin" in plan
+    assert "ShuffledHashJoin" not in plan
+
+
+@pytest.mark.parametrize("threshold", ["100k", "-1"])
+def test_triangles_edge_gate_shuffles_below_threshold(spark, threshold):
+    plan = _plan_at_threshold(spark, "copurchase_triangles", threshold)
+    assert "BroadcastHashJoin" not in plan
+    assert "ShuffledHashJoin" in plan

@@ -4,19 +4,13 @@ silently loses one fails here rather than at scale."""
 
 from __future__ import annotations
 
-from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _plan(spark, name: str) -> str:
-    df = REGISTRY[name].builder(spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import executed_plan
 
 
 def test_gopher_rules_scan_local(spark):
     """The quality gate must cost one scan: no hash exchange before
     the display sort, no join, no Python."""
-    plan = _plan(spark, "gopher_quality_rules")
+    plan = executed_plan(spark, "gopher_quality_rules")
     assert "Exchange hashpartitioning" not in plan
     assert "Join" not in plan
     assert "MapInPandas" not in plan
@@ -24,7 +18,7 @@ def test_gopher_rules_scan_local(spark):
 
 def test_duplicate_gram_coverage_no_cartesian(spark):
     """Gram-key shuffle + re-join — never all-pairs."""
-    plan = _plan(spark, "duplicate_gram_coverage")
+    plan = executed_plan(spark, "duplicate_gram_coverage")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -33,7 +27,7 @@ def test_unattributed_purchases_anti_join_on_equi_key(spark):
     """The NOT EXISTS must plan as a LEFT ANTI hash/merge join with
     the user_id equi-key carrying the shuffle — a nested-loop anti
     join would be the 100x scale bug."""
-    plan = _plan(spark, "unattributed_purchases")
+    plan = executed_plan(spark, "unattributed_purchases")
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -42,7 +36,7 @@ def test_unattributed_purchases_anti_join_on_equi_key(spark):
 def test_phash_pairs_equi_joins_only(spark):
     """Pigeonhole = 4 quarter equi-joins; an OR join would plan as a
     BroadcastNestedLoopJoin (n^2)."""
-    plan = _plan(spark, "image_phash_near_dup")
+    plan = executed_plan(spark, "image_phash_near_dup")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # round 9: the quarter joins moved onto capped_band_pairs, whose
@@ -56,7 +50,7 @@ def test_phash_pairs_equi_joins_only(spark):
 
 
 def test_audio_fingerprint_equi_joins_only(spark):
-    plan = _plan(spark, "audio_fingerprint_near_dup")
+    plan = executed_plan(spark, "audio_fingerprint_near_dup")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # round 7: capped_band_pairs pins the fingerprint frame with a
@@ -75,14 +69,14 @@ def test_curriculum_order_never_single_task_window(spark):
     plan must contain a RangePartitioning exchange and every window
     must be partitioned (no 'Window [' over an unpartitioned frame
     sorting the full corpus)."""
-    plan = _plan(spark, "curriculum_order")
+    plan = executed_plan(spark, "curriculum_order")
     assert "rangepartitioning" in plan.lower()
 
 
 def test_multimodal_pipeline_shape(spark):
     """Digest dedup shuffles on img_md5; decode kernel present; no
     cartesian anywhere in the composition."""
-    plan = _plan(spark, "multimodal_curation_pipeline")
+    plan = executed_plan(spark, "multimodal_curation_pipeline")
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -92,7 +86,7 @@ def test_source_epoch_plan_single_metadata_window(spark):
     """The unpartitioned windows run over source-level metadata (tens
     of rows) AFTER the partial-agg shuffle — the plan must aggregate
     before any unpartitioned window."""
-    plan = _plan(spark, "source_epoch_plan")
+    plan = executed_plan(spark, "source_epoch_plan")
     agg_pos = plan.find("HashAggregate")
     win_pos = plan.find("Window")
     assert agg_pos != -1 and win_pos != -1

@@ -3,13 +3,7 @@ queries — the 100 TB properties, asserted on the executed plan."""
 
 from __future__ import annotations
 
-from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _plan(spark, name: str) -> str:
-    df = REGISTRY[name].builder(spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import SF_DIR, executed_plan
 
 
 def test_dsir_model_is_broadcast(spark):
@@ -17,7 +11,7 @@ def test_dsir_model_is_broadcast(spark):
     stream (BroadcastHashJoin on b), never shuffle the tokens to the
     model; no Python anywhere; top-20 is TakeOrdered, not a global
     sort."""
-    plan = _plan(spark, "dsir_importance_weights")
+    plan = executed_plan(spark, "dsir_importance_weights")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan
@@ -28,7 +22,7 @@ def test_cross_source_matrix_no_hash_self_join(spark):
     """Pairs expand in-row from each hash's collected source set —
     the plan must contain no sort-merge self-join of the fingerprint
     table and no cartesian; the per-source totals join broadcasts."""
-    plan = _plan(spark, "cross_source_dup_matrix")
+    plan = executed_plan(spark, "cross_source_dup_matrix")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
@@ -39,7 +33,7 @@ def test_label_centroid_pair_join_is_metadata_sized(spark):
     centroid aggregation, so the broadcast nested-loop is LABELS x
     LABELS metadata — the aggregates must appear below the join and
     nothing may cartesian the raw vectors."""
-    plan = _plan(spark, "label_centroid_similarity")
+    plan = executed_plan(spark, "label_centroid_similarity")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # deliberate: 10x10 rows
     assert "HashAggregate" in plan
@@ -49,7 +43,7 @@ def test_hard_negative_mining_salted_two_stage(spark):
     """Anchors broadcast against one corpus scan; the per-anchor
     top-k must run the salted two-stage form — two partitioned
     Window nodes — and never a cartesian of the corpus with itself."""
-    plan = _plan(spark, "hard_negative_mining")
+    plan = executed_plan(spark, "hard_negative_mining")
     assert "CartesianProduct" not in plan
     assert plan.count("RunningWindowFunction") >= 2 or plan.count("Window") >= 2
     # the broadcast side is the <=10-row anchor set, not the corpus
@@ -60,7 +54,7 @@ def test_vocab_coverage_rank_is_range_partitioned(spark):
     """The vocabulary ranking must come from with_global_rank's
     range-partitioned prefix-sum, never one Window.orderBy task over
     a 100M-term vocabulary."""
-    plan = _plan(spark, "vocab_coverage_curve")
+    plan = executed_plan(spark, "vocab_coverage_curve")
     assert "rangepartitioning" in plan.lower()
     assert "CartesianProduct" not in plan
 
@@ -69,7 +63,7 @@ def test_packing_report_scan_shaped(spark):
     """One scan crossed with a 3-row literal: the only join allowed
     is the broadcast of the context-length literal; no Python, no
     sort-merge join."""
-    plan = _plan(spark, "packing_efficiency_report")
+    plan = executed_plan(spark, "packing_efficiency_report")
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan
@@ -80,7 +74,7 @@ def test_pq_assignment_broadcasts_codebook(spark):
     the vectors as a broadcast (the crossJoins with the 8-row
     subspace literal and 16-row codebook are deliberate BNLJ over
     metadata); no Python, no cartesian, one partial-agg shuffle."""
-    plan = _plan(spark, "pq_codebook_assign")
+    plan = executed_plan(spark, "pq_codebook_assign")
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan
     assert "HashAggregate" in plan
@@ -91,7 +85,7 @@ def test_pq_adc_search_is_equi_join_on_codes(spark):
     table must join on (m, code) as a BroadcastHashJoin — the full
     vectors are touched only for the 50-row-per-query re-rank and
     the ground-truth scan."""
-    plan = _plan(spark, "pq_adc_recall_eval")
+    plan = executed_plan(spark, "pq_adc_recall_eval")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan
@@ -104,17 +98,12 @@ def test_matryoshka_probe_set_broadcasts(spark):
     the top-k frame (read by the per-d rows AND the d=64 gold
     filter), which prints as an RDD scan — so the broadcast structure
     is asserted on the unpinned _truncation_top subtree."""
-    plan = _plan(spark, "matryoshka_truncation_eval")
+    plan = executed_plan(spark, "matryoshka_truncation_eval")
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan
     from stockpulse_spark.plans.registry_vectoreval import _truncation_top
 
-    inner = (
-        _truncation_top(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    inner = executed_plan(spark, _truncation_top(spark, SF_DIR))
     assert "CartesianProduct" not in inner
     assert "MapInPandas" not in inner
     assert "BroadcastNestedLoopJoin" in inner  # deliberate tiny probes
@@ -129,7 +118,7 @@ def test_quantile_normalize_rank_join_shape(spark):
     tests/test_rank_property.py; under this query's composition the
     lazy localCheckpoint prints as an RDD scan, so the range exchange
     is asserted there, not here.)"""
-    plan = _plan(spark, "quantile_normalize_doclen")
+    plan = executed_plan(spark, "quantile_normalize_doclen")
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan
     # equi hash join on tr = gr (broadcast at test scale, shuffle at
@@ -143,7 +132,7 @@ def test_leakage_free_training_set_single_exchange(spark):
     """No join: labels and features share ONE user_id exchange; the
     RANGE frames and the lag window must all be partitioned on
     user_id; no Python, no cartesian."""
-    plan = _plan(spark, "leakage_free_training_set")
+    plan = executed_plan(spark, "leakage_free_training_set")
     assert "Join" not in plan
     assert "MapInPandas" not in plan
     assert plan.count("Exchange hashpartitioning(user_id") == 1
@@ -153,7 +142,7 @@ def test_leakage_free_training_set_single_exchange(spark):
 def test_join_ivm_terms_are_equi_joins(spark):
     """Every IVM term joins on the orderkey equi-key — a nested-loop
     term would silently turn the delta maintenance quadratic."""
-    plan = _plan(spark, "join_ivm_delta_check")
+    plan = executed_plan(spark, "join_ivm_delta_check")
     assert "CartesianProduct" not in plan
     # the 1-row certificate broadcast is the only nested-loop allowed
     assert plan.count("BroadcastNestedLoopJoin") <= 1
@@ -164,7 +153,7 @@ def test_salted_join_is_shuffled_hash_on_salted_key(spark):
     """The technique must actually run: ShuffledHashJoin (not a
     broadcast that would make the salt a no-op at test scale) with
     __salt in the join keys."""
-    plan = _plan(spark, "salted_skew_join_stats")
+    plan = executed_plan(spark, "salted_skew_join_stats")
     assert "ShuffledHashJoin" in plan
     assert "__salt" in plan
     assert "BroadcastHashJoin" not in plan
@@ -179,18 +168,13 @@ def test_cdc_chunk_dedup_one_scan_shape(spark):
     branch share one computation), which prints as an RDD scan in the
     outer plan — so the window/shuffle structure is asserted on the
     unpinned _chunk_groups subtree the builder wraps."""
-    plan = _plan(spark, "content_defined_chunk_dedup")
+    plan = executed_plan(spark, "content_defined_chunk_dedup")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "MapInPandas" not in plan
     from stockpulse_spark.plans.registry_cdc2 import _chunk_groups
 
-    inner = (
-        _chunk_groups(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    inner = executed_plan(spark, _chunk_groups(spark, SF_DIR))
     assert "windowspecdefinition(doc_id" in inner
     assert "CartesianProduct" not in inner
     assert "SortMergeJoin" not in inner
@@ -201,7 +185,7 @@ def test_audience_overlap_no_cartesian(spark):
     """The pair skeleton comes from the user equi-join; estimates
     attach via broadcasts — nothing may cross the distinct-user
     table with itself without the user key."""
-    plan = _plan(spark, "audience_overlap_sketch")
+    plan = executed_plan(spark, "audience_overlap_sketch")
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan
 
@@ -209,7 +193,7 @@ def test_audience_overlap_no_cartesian(spark):
 def test_token_spectrum_two_aggregates_only(spark):
     """Term-count shuffle then a 6-group partial agg; the corpus
     total joins as a 1-row broadcast."""
-    plan = _plan(spark, "token_frequency_spectrum")
+    plan = executed_plan(spark, "token_frequency_spectrum")
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan

@@ -10,12 +10,7 @@ import datetime as dt
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _rows(spark, name, sf=SF_DIR):
-    return REGISTRY[name].builder(spark, sf).collect()
+from tests.conftest import query_rows
 
 
 def _write_market(path, orders, lineitem) -> None:
@@ -59,7 +54,7 @@ def test_cf_neighbors_closed_form(spark, tmp_path):
     lineitem += [(2, p) for p in (1, 2, 3)]
     lineitem += [(3, 4)]
     _write_market(tmp_path, orders, lineitem)
-    out = _rows(spark, "customer_cf_neighbors", str(tmp_path))
+    out = query_rows(spark, "customer_cf_neighbors", str(tmp_path))
     got = {(r["customer"], r["neighbor"]): r for r in out}
     assert set(got) == {(100, 200), (200, 100)}
     for r in got.values():
@@ -76,7 +71,7 @@ def test_cf_hot_part_is_df_capped(spark, tmp_path):
     orders = [(i, 1000 + i, _D) for i in range(70)]
     lineitem = [(i, 99) for i in range(70)]
     _write_market(tmp_path, orders, lineitem)
-    assert _rows(spark, "customer_cf_neighbors", str(tmp_path)) == []
+    assert query_rows(spark, "customer_cf_neighbors", str(tmp_path)) == []
 
 
 def test_cf_rank_orders_by_jaccard_then_neighbor(spark, tmp_path):
@@ -87,7 +82,7 @@ def test_cf_rank_orders_by_jaccard_then_neighbor(spark, tmp_path):
     lineitem += [(2, p) for p in (1, 2, 3)]
     lineitem += [(3, p) for p in (1, 2, 8, 9)]
     _write_market(tmp_path, orders, lineitem)
-    mine = [r for r in _rows(spark, "customer_cf_neighbors", str(tmp_path)) if r["customer"] == 100]
+    mine = [r for r in query_rows(spark, "customer_cf_neighbors", str(tmp_path)) if r["customer"] == 100]
     assert [r["neighbor"] for r in mine] == [200, 300]
     assert mine[0]["jaccard"] == 1.0
     assert mine[1]["jaccard"] == 0.4
@@ -116,7 +111,7 @@ def test_popularity_hitrate_closed_form(spark, tmp_path):
     ]
     lineitem = [(1, 1), (2, 1), (3, 1), (4, 1), (5, 50), (6, 1)]
     _write_market(tmp_path, orders, lineitem)
-    (r,) = _rows(spark, "popularity_rec_hitrate", str(tmp_path))
+    (r,) = query_rows(spark, "popularity_rec_hitrate", str(tmp_path))
     assert r["n_test_customers"] == 3  # 400, 500, 600
     assert r["n_hit_customers"] == 2  # 400 and 600 bought part 1
     assert abs(r["hitrate_at_20"] - 2.0 / 3.0) < 1e-6
@@ -134,7 +129,7 @@ def test_popularity_model_sees_only_train_rows(spark, tmp_path):
     ]
     lineitem = [(1, 1)] + [(10 + i, 777) for i in range(5)]
     _write_market(tmp_path, orders, lineitem)
-    (r,) = _rows(spark, "popularity_rec_hitrate", str(tmp_path))
+    (r,) = query_rows(spark, "popularity_rec_hitrate", str(tmp_path))
     assert r["n_test_customers"] == 5
     assert r["n_hit_customers"] == 0
     assert r["hitrate_at_20"] == 0.0
@@ -183,7 +178,7 @@ def test_skew_report_flags_low_cardinality_key(spark, tmp_path):
         ),
         str(tmp_path / "lineitem.parquet"),
     )
-    out = {r["partition_key"]: r for r in _rows(spark, "hash_partition_skew_report", str(tmp_path))}
+    out = {r["partition_key"]: r for r in query_rows(spark, "hash_partition_skew_report", str(tmp_path))}
     src = out["documents.source"]
     assert src["n_buckets_used"] == 1
     assert src["skew_ratio"] == 32.0
@@ -197,6 +192,6 @@ def test_skew_report_flags_low_cardinality_key(spark, tmp_path):
 
 
 def test_skew_report_on_testdata_orderkey_flat_source_skewed(spark):
-    out = {r["partition_key"]: r for r in _rows(spark, "hash_partition_skew_report")}
+    out = {r["partition_key"]: r for r in query_rows(spark, "hash_partition_skew_report")}
     assert out["lineitem.l_orderkey"]["balanced"]
     assert not out["documents.source"]["balanced"]

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stockpulse_spark.sources.sinks import write_bronze
+from tests.conftest import executed_plan
 
 
 @pytest.fixture()
@@ -29,7 +30,7 @@ def test_bronze_partition_pruning(spark, bars, tmp_path):
     assert out.count() == bars.count()
     # a symbol filter must prune to the one partition directory
     pruned = out.filter(F.col("symbol") == "AAPL")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, pruned)
     assert pruned.count() == 6
     files = list((tmp_path / "bronze").glob("symbol=*"))
     assert {f.name for f in files} == {"symbol=AAPL", "symbol=MSFT", "symbol=TSLA"}

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from stockpulse_spark.llmdata.hashing import word32_sql
 from stockpulse_spark.operators.topk import salted_grouped_topk
 from stockpulse_spark.sources.tables import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, executed_plan
 
 
 def _events(spark):
@@ -70,7 +70,7 @@ def test_plan_has_no_unpartitioned_window(spark):
         5,
         F.expr(word32_sql("CAST(event_id AS STRING)")),
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spark, out)
     assert "CartesianProduct" not in plan
     # two window stages, stage 1 keyed by (group, __salt)
     assert plan.count("windowspecdefinition") >= 2

@@ -7,39 +7,12 @@ engines computing the same wrong thing) still fails."""
 
 from __future__ import annotations
 
-import os
-
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-from stockpulse_spark.plans import REGISTRY
 from stockpulse_spark.plans.registry_wave10 import (
     _CHUNK_SIZE,
     _CHUNK_STRIDE,
     _DOMAIN_CAP,
 )
-from tests.conftest import SF_DIR
-
-
-def _rows(spark, name, sf=SF_DIR):
-    return REGISTRY[name].builder(spark, sf).collect()
-
-
-def _write_documents(sf_dir: str, rows) -> None:
-    """rows: (doc_id, text, lang, source)."""
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array(
-                [len(r[1]) if r[1] is not None else None for r in rows],
-                pa.int64(),
-            ),
-        }
-    )
-    pq.write_table(tbl, os.path.join(sf_dir, "documents.parquet"))
+from tests.conftest import SF_DIR_MID, query_rows, write_documents
 
 
 # ------------------------------------------------------------------ #
@@ -55,10 +28,10 @@ def test_domain_cap_exact_enforcement(spark, tmp_path):
         (100 + i, f"big doc {i} here", "en", "big")
         for i in range(_DOMAIN_CAP + 17)
     ]
-    _write_documents(str(tmp_path), rows)
+    write_documents(str(tmp_path), rows)
     out = {
         r["source"]: r
-        for r in _rows(spark, "domain_cap_enforcement", str(tmp_path))
+        for r in query_rows(spark, "domain_cap_enforcement", str(tmp_path))
     }
     assert out["small"]["n_kept"] == 10
     assert out["small"]["keep_rate"] == 1.0
@@ -71,10 +44,10 @@ def test_domain_cap_rank_is_content_deterministic(spark, tmp_path):
     """The keep set is a function of (md5(text), doc_id), not of row
     order: reversing the ids of identical texts keeps the same texts."""
     rows = [(i, f"text number {i}", "en", "s") for i in range(5)]
-    _write_documents(str(tmp_path), rows)
-    a = _rows(spark, "domain_cap_enforcement", str(tmp_path))
-    _write_documents(str(tmp_path), list(reversed(rows)))
-    b = _rows(spark, "domain_cap_enforcement", str(tmp_path))
+    write_documents(str(tmp_path), rows)
+    a = query_rows(spark, "domain_cap_enforcement", str(tmp_path))
+    write_documents(str(tmp_path), list(reversed(rows)))
+    b = query_rows(spark, "domain_cap_enforcement", str(tmp_path))
     assert [r.asDict() for r in a] == [r.asDict() for r in b]
 
 
@@ -108,8 +81,8 @@ def test_chunk_closed_form_matches_brute_force(spark, tmp_path):
         (i, " ".join(f"w{j}" for j in range(n)), "en", f"s{n}")
         for i, n in enumerate(lengths)
     ]
-    _write_documents(str(tmp_path), rows)
-    out = {r["source"]: r for r in _rows(spark, "chunk_stride_plan", str(tmp_path))}
+    write_documents(str(tmp_path), rows)
+    out = {r["source"]: r for r in query_rows(spark, "chunk_stride_plan", str(tmp_path))}
     for n in lengths:
         m, emitted = _brute_chunks(n)
         r = out[f"s{n}"]
@@ -119,8 +92,8 @@ def test_chunk_closed_form_matches_brute_force(spark, tmp_path):
 
 
 def test_chunk_null_text_zero(spark, tmp_path):
-    _write_documents(str(tmp_path), [(0, None, "en", "nul")])
-    (r,) = _rows(spark, "chunk_stride_plan", str(tmp_path))
+    write_documents(str(tmp_path), [(0, None, "en", "nul")])
+    (r,) = query_rows(spark, "chunk_stride_plan", str(tmp_path))
     assert r["n_chunks"] == 0 and r["tokens_emitted"] == 0
     assert r["expansion_factor"] is None
 
@@ -136,15 +109,15 @@ def test_freshness_weights_are_exact_dyadics(spark):
     summation-order-independent."""
     a = {
         r["o_orderpriority"]: r["sum_weight"]
-        for r in _rows(spark, "freshness_decay_weights", "/root/testdata/sf0.01")
+        for r in query_rows(spark, "freshness_decay_weights", SF_DIR_MID)
     }
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
         b = {
             r["o_orderpriority"]: r["sum_weight"]
-            for r in _rows(
-                spark, "freshness_decay_weights", "/root/testdata/sf0.01"
+            for r in query_rows(
+                spark, "freshness_decay_weights", SF_DIR_MID
             )
         }
     finally:
@@ -152,7 +125,7 @@ def test_freshness_weights_are_exact_dyadics(spark):
     assert a == b
     shares = [
         r["weight_share"]
-        for r in _rows(spark, "freshness_decay_weights", "/root/testdata/sf0.01")
+        for r in query_rows(spark, "freshness_decay_weights", SF_DIR_MID)
     ]
     assert abs(sum(shares) - 1.0) < 1e-5
 
@@ -163,7 +136,7 @@ def test_freshness_weights_are_exact_dyadics(spark):
 
 
 def test_lsh_band_churn_bounds(spark):
-    rows = _rows(spark, "lsh_band_churn", "/root/testdata/sf0.01")
+    rows = query_rows(spark, "lsh_band_churn", SF_DIR_MID)
     assert [r["band_idx"] for r in rows] == list(range(8))
     n0 = rows[0]["n_docs"]
     for r in rows:
@@ -175,7 +148,7 @@ def test_lsh_band_churn_bounds(spark):
 
 
 def test_lsh_precision_levels_and_bounds(spark):
-    rows = _rows(spark, "lsh_precision_sample", "/root/testdata/sf0.01")
+    rows = query_rows(spark, "lsh_precision_sample", SF_DIR_MID)
     assert rows, "deployed tier emitted no candidates on testdata"
     levels = {round(m / 16.0, 6) for m in range(8, 17)}
     for r in rows:
@@ -199,9 +172,9 @@ def test_dedup_savings_on_doubled_corpus(spark, tmp_path):
     docs drop; NULL-text docs are never dropped."""
     rows = [(i, f"unique text {i} body", "en", "a") for i in range(4)]
     rows += [(100, None, "en", "nul"), (101, None, "en", "nul")]
-    _write_documents(str(tmp_path), rows)
+    write_documents(str(tmp_path), rows)
     out = {
-        r["source"]: r for r in _rows(spark, "dedup_token_savings", str(tmp_path))
+        r["source"]: r for r in query_rows(spark, "dedup_token_savings", str(tmp_path))
     }
     # doubled: source a has 8 rows, 4 clusters of 2 -> 4 dropped
     assert out["a"]["n_docs"] == 8
@@ -227,8 +200,8 @@ def test_keeper_chain_banner_bucket_capped(spark, tmp_path):
     blow-up the 10x audit measured)."""
     banner = " ".join(f"banner word {j} filler" for j in range(30))
     rows = [(i, banner, "en", "crawl") for i in range(100)]
-    _write_documents(str(tmp_path), rows)
-    out = _rows(spark, "dedup_keeper_transitive", str(tmp_path))
+    write_documents(str(tmp_path), rows)
+    out = query_rows(spark, "dedup_keeper_transitive", str(tmp_path))
     assert len(out) == 300  # A/B/C variants of 100 docs
     # within-trio A<-B<-C linkage may also be cut (those edges ride
     # the same saturated buckets), so every doc must simply keep
@@ -249,8 +222,8 @@ def test_compaction_plan_closed_form(spark, tmp_path):
     file (parquet row-group contract)."""
     rows = [(i, "abcdefghij", "en", "tiny") for i in range(6)]
     rows += [(50, "x" * 20000, "en", "jumbo"), (51, "y" * 100, "en", "jumbo")]
-    _write_documents(str(tmp_path), rows)
-    out = {r["source"]: r for r in _rows(spark, "file_compaction_plan", str(tmp_path))}
+    write_documents(str(tmp_path), rows)
+    out = {r["source"]: r for r in query_rows(spark, "file_compaction_plan", str(tmp_path))}
     assert out["tiny"]["n_files"] == 1
     assert out["tiny"]["total_bytes"] == 60
     # jumbo: doc 50 starts file 0 and overflows it (20000 > target);
@@ -267,15 +240,15 @@ def test_quality_keeper_prefers_more_unique_words(spark, tmp_path):
     pfx = "p0 p1 p2 p3 p4 p5 p6 p7 p8 p9"
     low = pfx + " rep rep rep rep"  # 14 tokens, 11 unique
     high = pfx + " uniq1 uniq2 uniq3 uniq4"  # 14 tokens, 14 unique
-    _write_documents(str(tmp_path), [(0, low, "en", "s"), (1, high, "en", "s")])
-    (r,) = _rows(spark, "quality_keeper_selection", str(tmp_path))
+    write_documents(str(tmp_path), [(0, low, "en", "s"), (1, high, "en", "s")])
+    (r,) = query_rows(spark, "quality_keeper_selection", str(tmp_path))
     assert r["n_clusters"] == 1 and r["n_multi"] == 1
     assert r["n_keeper_changed"] == 1
     assert r["tokens_kept_delta"] == 0  # same length, different content
 
 
 def test_decile_lift_monotone_bookkeeping(spark):
-    rows = _rows(spark, "score_decile_lift", "/root/testdata/sf0.01")
+    rows = query_rows(spark, "score_decile_lift", SF_DIR_MID)
     assert [r["decile"] for r in rows] == list(range(1, 11))
     total = sum(r["n_customers"] for r in rows)
     # ntile balance: deciles differ by at most one customer

@@ -7,11 +7,7 @@ same wrong width would still hash-match)."""
 
 from __future__ import annotations
 
-import os
-
 import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 from stockpulse_spark.plans import REGISTRY
 from stockpulse_spark.plans.registry_multimodal4 import (
@@ -20,27 +16,7 @@ from stockpulse_spark.plans.registry_multimodal4 import (
     _width_case_sql,
     fp_width_bits,
 )
-
-
-def _rows(spark, name, sf):
-    return REGISTRY[name].builder(spark, sf).collect()
-
-
-def _write_documents(sf_dir: str, rows) -> None:
-    """rows: (doc_id, text, lang, source)."""
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array(
-                [len(r[1]) if r[1] is not None else None for r in rows],
-                pa.int64(),
-            ),
-        }
-    )
-    pq.write_table(tbl, os.path.join(sf_dir, "documents.parquet"))
+from tests.conftest import query_rows, write_documents
 
 
 # ------------------------------------------------------------------ #
@@ -132,8 +108,8 @@ def test_audio_twin_recall_and_tau(spark, tmp_path):
     rows = [
         (d * 7919 + 4_100_000, f"clip {d}", "en", "s") for d in range(120)
     ]
-    _write_documents(str(tmp_path), rows)
-    out = _rows(spark, "audio_fingerprint_near_dup", str(tmp_path))
+    write_documents(str(tmp_path), rows)
+    out = query_rows(spark, "audio_fingerprint_near_dup", str(tmp_path))
     assert all(r["hamming"] <= 3 for r in out)
     pairs = {(r["vid_1"], r["vid_2"]) for r in out}
     twins = sum(
@@ -150,8 +126,8 @@ def test_image_twin_recall_and_tau(spark, tmp_path):
     rows = [
         (d * 104729 + 9_000_000, f"img {d}", "en", "s") for d in range(100)
     ]
-    _write_documents(str(tmp_path), rows)
-    out = _rows(spark, "image_phash_near_dup", str(tmp_path))
+    write_documents(str(tmp_path), rows)
+    out = query_rows(spark, "image_phash_near_dup", str(tmp_path))
     assert all(r["hamming"] <= 3 for r in out)
     pairs = {(r["vid_1"], r["vid_2"]) for r in out}
     twins = sum(
@@ -165,7 +141,7 @@ def test_audio_width_override_controls_band_width(spark, tmp_path):
     harness only): wider bands => band values exceed the 8-bit range
     at least somewhere on a 64-doc corpus."""
     rows = [(d + 123_456, f"clip {d}", "en", "s") for d in range(64)]
-    _write_documents(str(tmp_path), rows)
+    write_documents(str(tmp_path), rows)
     from stockpulse_spark.plans.registry_multimodal4 import (
         _attach_wav_variants,
         wav_fingerprint_bands,

@@ -5,19 +5,14 @@ CLAIM to compute)."""
 
 from __future__ import annotations
 
-from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _rows(spark, name, sf=SF_DIR):
-    return REGISTRY[name].builder(spark, sf).collect()
+from tests.conftest import SF_DIR, query_rows
 
 
 def test_growth_accounting_reconciles_wau(spark):
     """WAU(w) = new + retained + resurrected, and retained(w) =
     WAU(w-1) - churned(w): the four flows must reconcile the weekly
     active counts exactly."""
-    rows = sorted(_rows(spark, "growth_accounting_weekly"), key=lambda r: r["wk"])
+    rows = sorted(query_rows(spark, "growth_accounting_weekly"), key=lambda r: r["wk"])
     wau = {
         r["wk"]: r["n_new"] + r["n_retained"] + r["n_resurrected"]
         for r in rows
@@ -32,7 +27,7 @@ def test_growth_accounting_reconciles_wau(spark):
 
 def test_sliding_wau_bounds_dau(spark):
     """WAU >= same-day DAU everywhere, and stickiness in (0, 1]."""
-    rows = _rows(spark, "sliding_7d_active_users")
+    rows = query_rows(spark, "sliding_7d_active_users")
     assert rows
     for r in rows:
         assert r["active_7d"] >= r["active_1d"] > 0
@@ -44,7 +39,7 @@ def test_weighted_median_is_bounded_order_statistic(spark):
     and the half-weight crossing must actually hold."""
     import duckdb
 
-    rows = _rows(spark, "weighted_median_price")
+    rows = query_rows(spark, "weighted_median_price")
     con = duckdb.connect()
     for r in rows:
         lo, hi = con.execute(
@@ -66,7 +61,7 @@ def test_zorder_tightens_secondary_dimension(spark):
     """The point of Z-ordering: versus user-only bucketing, the
     interleaved layout must hold a (much) tighter hour span per
     bucket while staying reasonable on users."""
-    rows = {r["layout"]: r for r in _rows(spark, "zorder_clustering_stats")}
+    rows = {r["layout"]: r for r in query_rows(spark, "zorder_clustering_stats")}
     z, lin = rows["zorder"], rows["linear"]
     # linear (user-only) buckets see ~the full hour range; zorder
     # buckets must prune the time dimension too
@@ -74,7 +69,7 @@ def test_zorder_tightens_secondary_dimension(spark):
 
 
 def test_mmr_picks_are_distinct_and_lead_with_relevance(spark):
-    rows = sorted(_rows(spark, "mmr_diversified_topk"), key=lambda r: r["pick_order"])
+    rows = sorted(query_rows(spark, "mmr_diversified_topk"), key=lambda r: r["pick_order"])
     assert len(rows) == 3
     assert len({r["vec_id"] for r in rows}) == 3
     # first pick is pure-relevance argmax: no penalty applied
@@ -86,7 +81,7 @@ def test_mmr_picks_are_distinct_and_lead_with_relevance(spark):
 
 
 def test_token_budget_sample_respects_quota(spark):
-    rows = _rows(spark, "doc_token_budget_sample")
+    rows = query_rows(spark, "doc_token_budget_sample")
     assert rows
     for r in rows:
         assert r["tokens_sampled"] <= r["quota"]
@@ -96,7 +91,7 @@ def test_token_budget_sample_respects_quota(spark):
 def test_transition_matrix_rows_sum_to_one(spark):
     from collections import defaultdict
 
-    rows = _rows(spark, "event_transition_matrix")
+    rows = query_rows(spark, "event_transition_matrix")
     by_cur = defaultdict(float)
     for r in rows:
         assert 0 < r["p"] <= 1
@@ -108,13 +103,13 @@ def test_transition_matrix_rows_sum_to_one(spark):
 def test_peak_concurrency_bounded_by_session_count(spark):
     """Peak concurrent sessions on a day can't exceed that day's
     total session-interval count (and must be positive)."""
-    peaks = _rows(spark, "peak_concurrent_sessions_daily")
+    peaks = query_rows(spark, "peak_concurrent_sessions_daily")
     assert peaks
     assert all(r["peak_concurrent"] > 0 for r in peaks)
 
 
 def test_decontamination_counts_are_consistent(spark):
-    rows = _rows(spark, "decontamination_overlap")
+    rows = query_rows(spark, "decontamination_overlap")
     assert rows
     for r in rows:
         assert 0 <= r["n_contaminated"] <= r["n_train_docs"]
@@ -129,7 +124,7 @@ def test_scd2_pit_join_is_lossless(spark):
     join's total event count equals the raw event count."""
     import duckdb
 
-    rows = _rows(spark, "scd2_point_in_time_join")
+    rows = query_rows(spark, "scd2_point_in_time_join")
     total = sum(r["n_events"] for r in rows)
     raw = duckdb.connect().execute(
         f"SELECT COUNT(*) FROM '{SF_DIR}/events.parquet'"

@@ -11,12 +11,7 @@ import datetime as dt
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _rows(spark, name, sf=SF_DIR):
-    return REGISTRY[name].builder(spark, sf).collect()
+from tests.conftest import query_rows
 
 
 def _write_events(path, rows):
@@ -62,7 +57,7 @@ def test_changepoint_finds_planted_shift(spark, tmp_path):
         level = 10.0 if i < 24 else 30.0
         rows.append((t0 + dt.timedelta(hours=i), 1, level))
     _write_events(tmp_path, rows)
-    out = _rows(spark, "changepoint_binseg", str(tmp_path))
+    out = query_rows(spark, "changepoint_binseg", str(tmp_path))
     assert len(out) == 1
     r = out[0]
     assert r["n_obs"] == 40
@@ -79,7 +74,7 @@ def test_changepoint_flat_series_reduction_zero(spark, tmp_path):
     _write_events(
         tmp_path, [(t0 + dt.timedelta(hours=i), 7, 5.0) for i in range(10)]
     )
-    out = _rows(spark, "changepoint_binseg", str(tmp_path))
+    out = query_rows(spark, "changepoint_binseg", str(tmp_path))
     assert len(out) == 1
     assert out[0]["sse_before"] == 0.0
     assert out[0]["sse_reduction"] == 0.0
@@ -98,7 +93,7 @@ def test_theil_sen_ignores_outlier(spark, tmp_path):
             y = 1000.0  # gross spike
         rows.append((t0 + dt.timedelta(days=day), 3, y))
     _write_events(tmp_path, rows)
-    out = _rows(spark, "theil_sen_trend", str(tmp_path))
+    out = query_rows(spark, "theil_sen_trend", str(tmp_path))
     assert len(out) == 1
     r = out[0]
     assert r["n_days"] == 11
@@ -125,7 +120,7 @@ def test_activity_bitmap_planted_days(spark, tmp_path):
     # two events on one day must not double-set the bit
     rows.append((dt.datetime(2024, 3, 2, 18, 0), 5, 2.0))
     _write_events(tmp_path, rows)
-    out = _rows(spark, "activity_bitmap_rollup", str(tmp_path))
+    out = query_rows(spark, "activity_bitmap_rollup", str(tmp_path))
     assert len(out) == 1
     r = out[0]
     expect_mask = sum(1 << (d - 1) for d in active_days)
@@ -142,7 +137,7 @@ def test_triangles_planted_graph(spark, tmp_path):
     # orders: {A,B,C} and {B,C,D} -> edges AB AC BC BD CD
     # triangles: ABC and BCD; B and C are in both
     _write_lineitem(tmp_path, {1: [10, 20, 30], 2: [20, 30, 40]})
-    out = {r["node"]: r for r in _rows(spark, "copurchase_triangles", str(tmp_path))}
+    out = {r["node"]: r for r in query_rows(spark, "copurchase_triangles", str(tmp_path))}
     assert {n: out[n]["triangles"] for n in sorted(out)} == {
         10: 1,
         20: 2,
@@ -161,7 +156,7 @@ def test_triangles_planted_graph(spark, tmp_path):
 
 
 def test_kalman_gain_converges(spark):
-    rows = [r for r in _rows(spark, "kalman_local_level") if r["user_id"] == 0]
+    rows = [r for r in query_rows(spark, "kalman_local_level") if r["user_id"] == 0]
     rows.sort(key=lambda r: r["bucket_start"])
     gains = [r["gain"] for r in rows if r["gain"] is not None]
     assert len(gains) > 20
@@ -183,12 +178,12 @@ def test_kalman_gain_converges(spark):
 def test_acf_lag1_matches_single_lag_query(spark):
     multi = {
         r["event_type"]: r["acf"]
-        for r in _rows(spark, "acf_multilag")
+        for r in query_rows(spark, "acf_multilag")
         if r["lag"] == 1
     }
     single = {
         r["event_type"]: r["autocorr_lag1"]
-        for r in _rows(spark, "hourly_count_autocorr")
+        for r in query_rows(spark, "hourly_count_autocorr")
     }
     assert multi.keys() == single.keys()
     for k in multi:
@@ -200,7 +195,7 @@ def test_acf_lag1_matches_single_lag_query(spark):
 
 
 def test_km_curve_invariants(spark):
-    rows = _rows(spark, "kaplan_meier_churn")
+    rows = query_rows(spark, "kaplan_meier_churn")
     assert rows
     by_cohort = {}
     for r in rows:
@@ -238,7 +233,7 @@ def test_auc_perfect_separation(spark, tmp_path):
         }
     )
     pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-    out = {r["label"]: r for r in _rows(spark, "score_auc_rank", str(tmp_path))}
+    out = {r["label"]: r for r in query_rows(spark, "score_auc_rank", str(tmp_path))}
     assert out[1]["auc"] == 1.0
     assert out[0]["auc"] == 0.0
     assert out[1]["n_pos"] == 2 and out[1]["n_neg"] == 2
@@ -271,7 +266,7 @@ def test_gini_bounds_and_equality(spark, tmp_path):
         }
     )
     pq.write_table(tbl, str(tmp_path / "orders.parquet"))
-    out = {r["o_year"]: r for r in _rows(spark, "gini_revenue_yearly", str(tmp_path))}
+    out = {r["o_year"]: r for r in query_rows(spark, "gini_revenue_yearly", str(tmp_path))}
     assert out[1995]["gini"] == 0.0
     assert out[1996]["gini"] > 0.7
     assert out[1995]["total_revenue"] == 200.0
@@ -291,7 +286,7 @@ def test_dtw_planted_offset(spark, tmp_path):
             rows.append((t0 + dt.timedelta(days=day), u, base))
         rows.append((t0 + dt.timedelta(days=day), 4, base + 1.0))
     _write_events(tmp_path, rows)
-    out = {r["user_id"]: r for r in _rows(spark, "dtw_to_reference", str(tmp_path))}
+    out = {r["user_id"]: r for r in query_rows(spark, "dtw_to_reference", str(tmp_path))}
     # the median reference equals users 1-3's series exactly
     for u in (1, 2, 3):
         assert out[u]["dtw_distance"] == 0.0

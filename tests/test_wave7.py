@@ -9,11 +9,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _rows(spark, name, sf=SF_DIR):
-    return REGISTRY[name].builder(spark, sf).collect()
+from tests.conftest import query_rows
 
 
 def _write_events(path, rows):
@@ -40,7 +36,7 @@ def test_loo_encoding_excludes_own_row(spark, tmp_path):
     ]
     _write_events(tmp_path, rows)
     out = sorted(
-        _rows(spark, "loo_target_encoding", str(tmp_path)),
+        query_rows(spark, "loo_target_encoding", str(tmp_path)),
         key=lambda r: r["event_id"],
     )
     assert [r["loo_enc"] for r in out] == [25.0, 20.0, 15.0]
@@ -58,7 +54,7 @@ def test_woe_separating_feature(spark, tmp_path):
             (t0 + dt.timedelta(minutes=40 + i), 2, "purchase", 100.0 + i)
         )
     _write_events(tmp_path, rows)
-    out = sorted(_rows(spark, "woe_binning", str(tmp_path)), key=lambda r: r["bin"])
+    out = sorted(query_rows(spark, "woe_binning", str(tmp_path)), key=lambda r: r["bin"])
     assert len(out) == 10
     assert all(r["n"] == 4 for r in out)  # equal-count deciles
     assert all(r["woe"] is None or r["woe"] < 0 for r in out[:5])
@@ -74,7 +70,7 @@ def test_psi_zero_when_halves_identical(spark, tmp_path):
     for i, v in enumerate(vals):  # second half: identical distribution
         rows.append((t0 + dt.timedelta(minutes=100 + i), 1, "view", v))
     _write_events(tmp_path, rows)
-    out = _rows(spark, "psi_value_drift", str(tmp_path))
+    out = query_rows(spark, "psi_value_drift", str(tmp_path))
     assert len(out) == 1
     assert out[0]["psi"] == 0.0
 
@@ -89,7 +85,7 @@ def test_psi_detects_planted_shift(spark, tmp_path):
             (t0 + dt.timedelta(minutes=100 + i), 1, "view", float((i + 1) * 10))
         )
     _write_events(tmp_path, rows)
-    out = _rows(spark, "psi_value_drift", str(tmp_path))
+    out = query_rows(spark, "psi_value_drift", str(tmp_path))
     assert out[0]["psi"] > 0.2  # the standard retrain alarm fires
 
 
@@ -109,7 +105,7 @@ def test_nb_classifier_disjoint_vocab_is_perfect(spark, tmp_path):
         }
     )
     pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    out = _rows(spark, "nb_lang_classifier", str(tmp_path))
+    out = query_rows(spark, "nb_lang_classifier", str(tmp_path))
     m = {(r["true_lang"], r["pred_lang"]): r["n_docs"] for r in out}
     assert m == {("en", "en"): 10, ("es", "es"): 10}
 
@@ -123,7 +119,7 @@ def test_user_feature_matrix_known_values(spark, tmp_path):
         (t0 + dt.timedelta(days=2, hours=5), 2, "view", 5.0),
     ]
     _write_events(tmp_path, rows)
-    out = {r["user_id"]: r for r in _rows(spark, "user_feature_matrix", str(tmp_path))}
+    out = {r["user_id"]: r for r in query_rows(spark, "user_feature_matrix", str(tmp_path))}
     u1 = out[1]
     assert u1["n_events"] == 3
     assert u1["n_active_days"] == 2
@@ -137,7 +133,7 @@ def test_user_feature_matrix_known_values(spark, tmp_path):
 
 
 def test_bootstrap_ci_brackets_mean(spark):
-    for r in _rows(spark, "poisson_bootstrap_ci"):
+    for r in query_rows(spark, "poisson_bootstrap_ci"):
         assert r["boot_se"] > 0
         assert r["ci_lo"] <= r["mean_value"] <= r["ci_hi"]
         # CI width should be a few SEs, not degenerate or huge
@@ -164,7 +160,7 @@ def test_seasonal_anomaly_flags_planted_spike(spark, tmp_path):
     _write_events(tmp_path, rows)
     out = {
         (r["event_type"], r["hr"]): r
-        for r in _rows(spark, "seasonal_anomaly_rates", str(tmp_path))
+        for r in query_rows(spark, "seasonal_anomaly_rates", str(tmp_path))
     }
     assert out[("view", 3)]["n_anomalies"] == 1
     assert out[("view", 12)]["n_anomalies"] == 0
@@ -182,13 +178,13 @@ def test_isotonic_pools_planted_v_shape(spark, tmp_path):
         ],
     )
     out = sorted(
-        _rows(spark, "isotonic_trend", str(tmp_path)), key=lambda r: r["d"]
+        query_rows(spark, "isotonic_trend", str(tmp_path)), key=lambda r: r["d"]
     )
     assert [r["iso_fit"] for r in out] == [10.0, 25.0, 25.0]
 
 
 def test_isotonic_monotone_and_mean_preserving(spark):
-    rows = _rows(spark, "isotonic_trend")
+    rows = query_rows(spark, "isotonic_trend")
     assert rows
     by_user = {}
     for r in rows:
@@ -212,7 +208,7 @@ def test_isotonic_identity_on_monotone_series(spark, tmp_path):
         ],
     )
     out = sorted(
-        _rows(spark, "isotonic_trend", str(tmp_path)), key=lambda r: r["d"]
+        query_rows(spark, "isotonic_trend", str(tmp_path)), key=lambda r: r["d"]
     )
     assert [r["iso_fit"] for r in out] == vals
 
@@ -235,7 +231,7 @@ def test_viterbi_labels_sustained_burst_exactly(spark, tmp_path):
     counts = [2] * 20 + [12] * 10 + [2] * 20
     _burst_series(tmp_path, counts)
     out = sorted(
-        _rows(spark, "burst_detection_viterbi", str(tmp_path)),
+        query_rows(spark, "burst_detection_viterbi", str(tmp_path)),
         key=lambda r: r["hr"],
     )
     assert len(out) == 50
@@ -249,7 +245,7 @@ def test_viterbi_suppresses_single_mild_spike(spark, tmp_path):
     # 2-nat round trip, so the label must NOT flicker
     counts = [2] * 25 + [5] + [2] * 24
     _burst_series(tmp_path, counts)
-    out = _rows(spark, "burst_detection_viterbi", str(tmp_path))
+    out = query_rows(spark, "burst_detection_viterbi", str(tmp_path))
     assert all(r["burst_state"] == 0 for r in out)
 
 

@@ -8,32 +8,7 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _rows(spark, name, sf=SF_DIR):
-    return REGISTRY[name].builder(spark, sf).collect()
-
-
-def _write_documents(sf_dir: str, rows) -> None:
-    """rows: (doc_id, text, lang, source)."""
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array(
-                [len(r[1]) if r[1] is not None else None for r in rows],
-                pa.int64(),
-            ),
-        }
-    )
-    pq.write_table(tbl, os.path.join(sf_dir, "documents.parquet"))
+from tests.conftest import SF_DIR, executed_plan, query_rows, write_documents
 
 
 # ------------------------------------------------------------------ #
@@ -48,7 +23,7 @@ def test_containment_tier_catches_both_snippet_cohorts(spark):
     tier misses measurably (catch 0.0 asserted) — are caught at 1.0
     on the test corpus, because every shingle of an extracted snippet
     comes from its source document."""
-    rows = {r["cohort"]: r for r in _rows(spark, "containment_recall_eval")}
+    rows = {r["cohort"]: r for r in query_rows(spark, "containment_recall_eval")}
     assert rows["copy_span10"]["catch_rate"] == 1.0, rows["copy_span10"]
     assert rows["copy_span4"]["catch_rate"] == 1.0, rows["copy_span4"]
     assert rows["copy_span4"]["n_planted"] > 0
@@ -60,7 +35,7 @@ def test_containment_pairs_asymmetric_semantics(spark):
     dominates regardless of how large the source doc is."""
     pairs = {
         (r["doc_id_1"], r["doc_id_2"]): r
-        for r in _rows(spark, "snippet_containment_pairs")
+        for r in query_rows(spark, "snippet_containment_pairs")
     }
     assert pairs, "planted snippets must produce pairs"
     # source-span4 pairs under residue ids: (4o, 4o+2)
@@ -75,13 +50,7 @@ def test_containment_pairs_asymmetric_semantics(spark):
 
 
 def test_containment_pairs_plan_has_no_cartesian(spark):
-    plan = (
-        REGISTRY["snippet_containment_pairs"]
-        .builder(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(spark, "snippet_containment_pairs")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -99,8 +68,8 @@ def test_ks_zero_on_identical_sources(spark, tmp_path):
         text = "w " * (10 + i % 5)
         rows.append((i, text.strip(), "en", "a"))
         rows.append((1000 + i, text.strip(), "en", "b"))
-    _write_documents(str(tmp_path), rows)
-    out = {r["source"]: r for r in _rows(spark, "ks_drift_by_source", str(tmp_path))}
+    write_documents(str(tmp_path), rows)
+    out = {r["source"]: r for r in query_rows(spark, "ks_drift_by_source", str(tmp_path))}
     assert out["a"]["ks_stat"] == 0.0
     assert out["b"]["ks_stat"] == 0.0
     assert not out["a"]["drifted"] and not out["b"]["drifted"]
@@ -114,8 +83,8 @@ def test_ks_detects_planted_length_shift(spark, tmp_path):
     for i in range(50):
         rows.append((i, "w " * 5, "en", "small"))
         rows.append((1000 + i, "w " * 500, "en", "big"))
-    _write_documents(str(tmp_path), rows)
-    out = {r["source"]: r for r in _rows(spark, "ks_drift_by_source", str(tmp_path))}
+    write_documents(str(tmp_path), rows)
+    out = {r["source"]: r for r in query_rows(spark, "ks_drift_by_source", str(tmp_path))}
     assert out["small"]["ks_stat"] == 1.0
     assert out["big"]["ks_stat"] == 1.0
     assert out["small"]["drifted"] and out["big"]["drifted"]
@@ -129,7 +98,7 @@ def test_ks_detects_planted_length_shift(spark, tmp_path):
 def test_kfold_partitions_every_doc_exactly_once(spark):
     from stockpulse_spark.sources.tables import load_table
 
-    rows = _rows(spark, "kfold_assignment_report")
+    rows = query_rows(spark, "kfold_assignment_report")
     n_docs = load_table(spark, SF_DIR, "documents").count()
     assert sum(r["n_docs"] for r in rows) == n_docs
     assert {r["fold"] for r in rows} <= set(range(10))
@@ -144,10 +113,10 @@ def test_kfold_assignment_is_content_independent(spark, tmp_path):
     b = [(i, "totally different words here", "en", "s") for i in range(200)]
     da, db = str(tmp_path / "a"), str(tmp_path / "b")
     os.makedirs(da), os.makedirs(db)
-    _write_documents(da, a)
-    _write_documents(db, b)
-    fa = {r["fold"]: r["n_docs"] for r in _rows(spark, "kfold_assignment_report", da)}
-    fb = {r["fold"]: r["n_docs"] for r in _rows(spark, "kfold_assignment_report", db)}
+    write_documents(da, a)
+    write_documents(db, b)
+    fa = {r["fold"]: r["n_docs"] for r in query_rows(spark, "kfold_assignment_report", da)}
+    fb = {r["fold"]: r["n_docs"] for r in query_rows(spark, "kfold_assignment_report", db)}
     assert fa == fb
 
 
@@ -157,7 +126,7 @@ def test_kfold_assignment_is_content_independent(spark, tmp_path):
 
 
 def test_bm25_ranks_matching_docs_and_orders_by_score(spark):
-    rows = _rows(spark, "bm25_topk_docs")
+    rows = query_rows(spark, "bm25_topk_docs")
     assert 0 < len(rows) <= 20
     scores = [r["bm25"] for r in rows]
     assert scores == sorted(scores, reverse=True)
@@ -174,8 +143,8 @@ def test_bm25_rewards_coverage_and_rarity(spark, tmp_path):
         (2, "merge merge merge merge merge merge", "en", "s"),
         (3, "window alone", "en", "s"),
     ] + filler
-    _write_documents(str(tmp_path), rows)
-    out = _rows(spark, "bm25_topk_docs", str(tmp_path))
+    write_documents(str(tmp_path), rows)
+    out = query_rows(spark, "bm25_topk_docs", str(tmp_path))
     ids = [r["doc_id"] for r in out]
     assert ids[0] == 1  # full coverage wins
     assert set(ids) <= {1, 2, 3}  # filler docs never score
@@ -195,8 +164,8 @@ def test_log_odds_surfaces_planted_distinctive_term(spark, tmp_path):
         rows.append((100 + i, "common words shared by all", "en", "y"))
     for i in range(20):
         rows.append((200 + i, "zebra common words", "en", "x"))
-    _write_documents(str(tmp_path), rows)
-    out = _rows(spark, "source_log_odds_terms", str(tmp_path))
+    write_documents(str(tmp_path), rows)
+    out = query_rows(spark, "source_log_odds_terms", str(tmp_path))
     x1 = [r for r in out if r["source"] == "x" and r["rank"] == 1][0]
     assert x1["term"] == "zebra"
     assert all(
@@ -207,13 +176,7 @@ def test_log_odds_surfaces_planted_distinctive_term(spark, tmp_path):
 def test_log_odds_rank_is_distributed(spark):
     """The per-source top-5 rides the grouped prefix-sum machinery —
     never a |sources|-task window over the (source x vocab) frame."""
-    plan = (
-        REGISTRY["source_log_odds_terms"]
-        .builder(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(spark, "source_log_odds_terms")
     assert "__pid" in plan
 
 
@@ -225,11 +188,11 @@ def test_log_odds_rank_is_distributed(spark):
 def test_fertility_closed_form(spark, tmp_path):
     """'ab cd' → 2 words, 2 sub-tokens, fertility 1.0;
     'ab, cd!' → 2 words, 4 sub-tokens (letters + punct), 2.0."""
-    _write_documents(
+    write_documents(
         str(tmp_path),
         [(1, "ab cd", "plain", "s"), (2, "ab, cd!", "punct", "s")],
     )
-    out = {r["lang"]: r for r in _rows(spark, "tokenizer_fertility_by_lang", str(tmp_path))}
+    out = {r["lang"]: r for r in query_rows(spark, "tokenizer_fertility_by_lang", str(tmp_path))}
     assert out["plain"]["n_words"] == 2
     assert out["plain"]["n_tokens"] == 2
     assert out["plain"]["fertility"] == 1.0

@@ -14,12 +14,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from stockpulse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
-
-
-def _rows(spark, name, sf=SF_DIR):
-    return REGISTRY[name].builder(spark, sf).collect()
+from tests.conftest import SF_DIR, query_rows, write_documents
 
 
 def _bucket(text: str) -> int:
@@ -30,23 +25,6 @@ def _bucket(text: str) -> int:
 def _split(text: str) -> str:
     b = _bucket(text)
     return "train" if b < 80 else ("val" if b < 90 else "test")
-
-
-def _write_documents(sf_dir: str, rows) -> None:
-    """rows: (doc_id, text, lang, source)."""
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array(
-                [len(r[1]) if r[1] is not None else None for r in rows],
-                pa.int64(),
-            ),
-        }
-    )
-    pq.write_table(tbl, os.path.join(sf_dir, "documents.parquet"))
 
 
 def _write_orders(sf_dir: str, prices) -> None:
@@ -69,8 +47,8 @@ def test_k_anonymity_closed_form(spark, tmp_path):
     quasi-identifier tuples are k=5 / releasable."""
     rows = [(0, "lonely words here", "en", "solo")]
     rows += [(10 + i, "same length txt!!", "en", "five") for i in range(5)]
-    _write_documents(str(tmp_path), rows)
-    out = {r["source"]: r for r in _rows(spark, "k_anonymity_report", str(tmp_path))}
+    write_documents(str(tmp_path), rows)
+    out = {r["source"]: r for r in query_rows(spark, "k_anonymity_report", str(tmp_path))}
     assert out["solo"]["k_anonymity"] == 1
     assert out["solo"]["rows_at_risk"] == 1
     assert out["solo"]["risk_share"] == 1.0
@@ -84,7 +62,7 @@ def test_k_anonymity_closed_form(spark, tmp_path):
 def test_k_anonymity_counts_every_row_once(spark):
     from stockpulse_spark.sources.tables import load_table
 
-    rows = _rows(spark, "k_anonymity_report")
+    rows = query_rows(spark, "k_anonymity_report")
     n = (
         load_table(spark, SF_DIR, "documents")
         .where("source IS NOT NULL AND lang IS NOT NULL AND n_chars IS NOT NULL")
@@ -124,7 +102,7 @@ def test_split_leakage_cells_closed_form(spark, tmp_path):
     text = _eval_base_text()
     words = text.split(" ")
     span10, span4 = " ".join(words[8:18]), " ".join(words[8:12])
-    _write_documents(str(tmp_path), [(1, text, "en", "s")])
+    write_documents(str(tmp_path), [(1, text, "en", "s")])
 
     trio = [(text, span10), (text, span4), (span10, span4)]
     expected = {}
@@ -134,7 +112,7 @@ def test_split_leakage_cells_closed_form(spark, tmp_path):
     n_cross = sum(v for (a, b), v in expected.items() if a != b)
     leak = round(n_cross / 3.0, 6)
 
-    out = _rows(spark, "split_leakage_audit", str(tmp_path))
+    out = query_rows(spark, "split_leakage_audit", str(tmp_path))
     got = {(r["split_a"], r["split_b"]): r for r in out}
     assert {k: r["n_pairs"] for k, r in got.items()} == expected
     assert n_cross > 0, "salt search guarantees a crossing pair"
@@ -149,8 +127,8 @@ def test_split_leakage_exact_dups_never_cross(spark, tmp_path):
     doc_train_test_split claims, here observed through the audit."""
     text = _eval_base_text()
     # two ids, same text: the exact-dup pair must be within-split
-    _write_documents(str(tmp_path), [(1, text, "en", "s"), (2, text, "en", "s")])
-    out = _rows(spark, "split_leakage_audit", str(tmp_path))
+    write_documents(str(tmp_path), [(1, text, "en", "s"), (2, text, "en", "s")])
+    out = query_rows(spark, "split_leakage_audit", str(tmp_path))
     got = {(r["split_a"], r["split_b"]): r["n_pairs"] for r in out}
     s = _split(text)
     # the (base1, base2) exact-dup pair lands in the diagonal cell
@@ -183,7 +161,7 @@ def test_join_estimate_exact_when_all_keys_heavy(spark, tmp_path):
         pa.table({"p_partkey": pa.array([7], pa.int64())}),
         str(tmp_path / "part.parquet"),
     )
-    out = {r["join_name"]: r for r in _rows(spark, "join_cardinality_estimate", str(tmp_path))}
+    out = {r["join_name"]: r for r in query_rows(spark, "join_cardinality_estimate", str(tmp_path))}
     lo = out["lineitem_orders"]
     assert (lo["exact_rows"], lo["est_rows"]) == (20, 20)
     assert lo["rel_error"] == 0.0 and lo["within_25pct"]
@@ -196,7 +174,7 @@ def test_join_estimate_within_bound_on_uniform_data(spark):
     """On the real (uniform) testdata both estimates certify within
     25% — deterministic (md5 sample), so this is a stable fact, not
     a flaky statistical assertion."""
-    out = {r["join_name"]: r for r in _rows(spark, "join_cardinality_estimate")}
+    out = {r["join_name"]: r for r in query_rows(spark, "join_cardinality_estimate")}
     for name in ("lineitem_orders", "lineitem_part"):
         r = out[name]
         assert r["exact_rows"] > 0
@@ -211,7 +189,7 @@ def test_join_estimate_within_bound_on_uniform_data(spark):
 def test_code_detect_separates_cohorts_on_testdata(spark):
     """The generated corpus is symbol-free word salad → natural flag
     rate exactly 0.0; every codeified plant is flagged → 1.0."""
-    out = {r["cohort"]: r for r in _rows(spark, "code_detect_eval")}
+    out = {r["cohort"]: r for r in query_rows(spark, "code_detect_eval")}
     assert out["natural"]["flag_rate"] == 0.0
     assert out["planted_code"]["flag_rate"] == 1.0
     assert out["planted_code"]["n_docs"] > 0
@@ -232,8 +210,8 @@ def test_code_detect_flags_real_code_in_natural_cohort(spark, tmp_path):
             code = cand2
         if prose and code:
             break
-    _write_documents(str(tmp_path), [(1, prose, "en", "s"), (2, code, "en", "s")])
-    out = {r["cohort"]: r for r in _rows(spark, "code_detect_eval", str(tmp_path))}
+    write_documents(str(tmp_path), [(1, prose, "en", "s"), (2, code, "en", "s")])
+    out = {r["cohort"]: r for r in query_rows(spark, "code_detect_eval", str(tmp_path))}
     nat = out["natural"]
     assert nat["n_docs"] == 2
     assert nat["n_flagged"] == 1
@@ -246,7 +224,7 @@ def test_code_detect_flags_real_code_in_natural_cohort(spark, tmp_path):
 
 
 def test_lsh_curve_closed_form_and_monotone(spark):
-    rows = _rows(spark, "lsh_tuning_curve")
+    rows = query_rows(spark, "lsh_tuning_curve")
     assert len(rows) == 36
     by_cfg = {}
     for r in rows:
@@ -274,7 +252,7 @@ def test_hill_closed_form_on_planted_values(spark, tmp_path):
     the 100 exceedances are 101..200, and the Hill estimator is the
     mean log-excess over them."""
     _write_orders(str(tmp_path), [float(i) for i in range(1, 201)])
-    (r,) = _rows(spark, "hill_tail_index", str(tmp_path))
+    (r,) = query_rows(spark, "hill_tail_index", str(tmp_path))
     assert r["n_values"] == 200
     assert r["n_top"] == 101
     assert r["n_exceed"] == 100
@@ -288,7 +266,7 @@ def test_hill_degenerate_all_equal(spark, tmp_path):
     """All values equal: no exceedances above the threshold, the
     estimator is undefined and stays NULL (never a divide error)."""
     _write_orders(str(tmp_path), [50.0] * 150)
-    (r,) = _rows(spark, "hill_tail_index", str(tmp_path))
+    (r,) = query_rows(spark, "hill_tail_index", str(tmp_path))
     assert r["n_exceed"] == 0
     assert r["hill_inv"] is None
     assert r["tail_alpha"] is None

@@ -19,7 +19,13 @@ Value comparison is exact for non-floats and bit-exact for floats (with
 a secondary 1e-9-relative diagnostic so a real semantic bug is
 distinguishable from hashing-level float divergence — BOTH fail).
 
-Usage: python tools/parity.py [sf_dir] [query ...]
+Usage: python tools/parity.py [--jobs N] [--reps N] [sf_dir] [query ...]
+
+`--reps N` runs each compare N times and fails every query that is not
+green on every repetition: DuckDB's parallel window sort places a NULL
+ORDER-BY key unstably and both engines fold float sums in
+nondeterministic order, so a data-dependent parity bug can be FLAKY
+and one green sweep proves nothing (SCALE.md round-6 second wave).
 """
 
 from __future__ import annotations
@@ -142,7 +148,7 @@ def compare(name: str, spark, con, sf_dir: str, verbose: bool = True):
 
 
 def parse_args(argv):
-    """Sweep CLI: [--jobs N | --jobs=N] [sf_dir] [name ...].
+    """Sweep CLI: [--jobs N | --jobs=N] [--reps N] [sf_dir] [name ...].
 
     argparse (not prefix-stripping): the old hand parser silently
     dropped the space form `--jobs 8` and then misread '8' as the
@@ -152,6 +158,7 @@ def parse_args(argv):
 
     ap = argparse.ArgumentParser(description="DuckDB-oracle parity sweep")
     ap.add_argument("--jobs", type=int, default=4)
+    ap.add_argument("--reps", type=int, default=1)
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
     ap.add_argument("names", nargs="*")
     return ap.parse_args(argv)
@@ -178,27 +185,38 @@ def main():
         con = getattr(tl, "con", None)
         if con is None:
             con = tl.con = duck_con(sf_dir)
-        try:
-            return compare(name, spark, con, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            return (f"ERROR: {type(e).__name__}: {e}", name, -1, None, None)
+        out = []
+        for _ in range(ns.reps):
+            try:
+                out.append(compare(name, spark, con, sf_dir))
+            except Exception as e:  # noqa: BLE001
+                out.append((f"ERROR: {type(e).__name__}: {e}", name, -1, None, None))
+        return out
 
-    failures = 0
+    failures = []
     if jobs <= 1:
         results = map(run_one, names)
     else:
         pool = ThreadPoolExecutor(max_workers=jobs)
         results = pool.map(run_one, names)
-    for name, (status, _, nrows, ts, td) in zip(names, results):
+    for name, reps in zip(names, results):
+        # show the first failing repetition, if any
+        status, _, nrows, ts, td = next(
+            (r for r in reps if r[0] != "OK"), reps[-1]
+        )
         flag = "✓" if status == "OK" else ("·" if status == "NO_ORACLE" else "✗")
         if flag == "✗":
-            failures += 1
+            failures.append(name)
         ts_s = f"{ts:.2f}s" if ts else "-"
+        green = sum(r[0] == "OK" for r in reps)
+        tally = f" {green}/{ns.reps} green" if ns.reps > 1 else ""
         print(
             f" {flag} {name:28s} rows={nrows:<8d} spark={ts_s:8s} "
-            f"{status if flag != '✓' else ''}",
+            f"{status if flag != '✓' else ''}{tally}",
             flush=True,
         )
+    if failures and ns.reps > 1:
+        print(f"not green on every rep: {' '.join(failures)}")
     sys.exit(1 if failures else 0)
 
 

@@ -1,173 +1,30 @@
-"""Scale smoke: replicate sf0.1 Nx with decorrelated keys and measure
-how the headline queries scale.
+"""Scale replicator: copy an sf dir N times larger with decorrelated
+keys, for measuring how queries scale.
 
-Usage:  python tools/scale_smoke.py [N]      (default N=10)
-
-Builds a /tmp copy of the testdata where every table is N times
-larger — new key ranges per replica (more users, more documents, more
-orders: the scale-OUT axis a real 100 TB corpus grows along, rather
-than longer per-key series), text rotated per replica so the dedup
-workload stays realistic instead of finding N planted copies of
-everything — then times each headline query on both the original and
-the big copy and prints one JSON line with the time ratios.
-
-A query whose ratio is ~N is linear (scan/shuffle bound); well below N
-means fixed overhead still dominates at this size; well above N means
-something super-linear snuck in — the regression this tool exists to
-catch.
+Every table grows N-fold along new key ranges per replica (more users,
+more documents, more orders: the scale-OUT axis a real 100 TB corpus
+grows along, rather than longer per-key series), with text suffixed
+per replica so the dedup workload stays realistic instead of finding
+N planted copies of everything.  `tools/probe.py --scale N` profiles
+queries on the original and the copy and reports per-metric ratios:
+a time or shuffle ratio of ~N is linear (scan/shuffle bound); well
+below N means fixed overhead still dominates at this size; well above
+N means something super-linear snuck in — the regression the
+replicator exists to catch.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from stockpulse_spark.plans import REGISTRY  # noqa: E402
-from stockpulse_spark.session import get_spark  # noqa: E402
 from stockpulse_spark.sources.tables import load_table  # noqa: E402
-
-QUERIES = [
-    "pricing_summary", "revenue_by_nation", "ohlcv_hourly", "ma5_cma",
-    "rsi14", "macd_12_26_9", "doc_text_stats", "doc_minhash_lsh",
-    "embedding_cosine_topk", "indicator_panel", "asof_prev_close",
-    # second round-2 wave: the new shuffle-heavy shapes
-    "bloom_prefilter_semi_join", "orders_merge_upsert",
-    "doc_unigram_logprob", "rolling_corr20", "kmeans_lloyd_2iter",
-    "min_cost_supplier",
-    # third round-2 wave: join-breadth, decontamination, attribution
-    "nation_market_share", "decontamination_overlap",
-    "purchase_attribution_batch", "zipf_slope",
-    "embedding_label_outliers",
-    # capstone composition + session-path shuffle shapes
-    "training_data_pipeline_v2", "session_paths_topk",
-    # round 3: star-join breadth, pair screens, LM join, regex scan,
-    # recursive kernel
-    "profit_by_nation_year", "supplier_count_by_part",
-    "pairwise_return_corr", "doc_bigram_logprob",
-    "pii_source_report", "heikin_ashi_daily",
-    # round 3 second wave: self-join-free pair expansion, iterative
-    # graph rank, shingle dedup, weighted sampling
-    "word_pmi_collocations", "basket_affinity_lift",
-    "copurchase_pagerank", "doc_substring_dup_pairs",
-    "doc_weighted_sample", "doc_weighted_sample_by_source",
-    # round 4: LSH family under a planted hot boilerplate bucket (the
-    # big dir gives ~2% of docs one shared crawl banner, so the hot
-    # band bucket only exists at scale — the bucket cap in
-    # minhash_lsh_pairs is what keeps the ratio near-linear), SRP ANN,
-    # and the adaptive connected-components keeper
-    "embedding_srp_ann", "dedup_keeper_transitive",
-    # round-4 second wave: the composed end-to-end pipelines
-    "doc_dedup_pipeline_full", "incremental_dedup_gate",
-    "decontamination_bloom_funnel", "semantic_dedup_keepers",
-    "holt_linear_trend", "holt_winters_additive",
-    # round-4 third wave: state-space folds, robust stats, survival,
-    # bitmap rollup, rank-statistic AUC (one global sort), and the
-    # 3-way triangle join — the shapes most worth watching at 10x
-    "kalman_local_level", "changepoint_binseg", "theil_sen_trend",
-    "acf_multilag", "copurchase_triangles", "activity_bitmap_rollup",
-    "kaplan_meier_churn", "score_auc_rank",
-    # round-4 fourth wave: DTW/SAX mining, trained NB, bootstrap
-    # (x100 replicate explode — the documented compute cost), feature
-    # encoders, IVM rollup, DQ gate, inference stats
-    "dtw_to_reference", "sax_motifs", "nb_lang_classifier",
-    "poisson_bootstrap_ci", "loo_target_encoding", "woe_binning",
-    "psi_value_drift", "mergeable_weekly_rollup",
-    "dq_expectation_suite", "kalman_events_batch",
-    "gini_revenue_yearly", "segment_type_chisq",
-    "trimmed_stats_by_type", "anova_hour_effect",
-    "isotonic_trend", "conformal_interval_coverage",
-    "burst_detection_viterbi",
-    # round 5: the evaluation harnesses — the inverted-index ground
-    # truth (sum df^2 cost) and the bucketed ANN recall join are the
-    # two shapes whose scaling needs measuring, not asserting
-    "minhash_lsh_recall_eval", "ann_recall_eval",
-    "shard_assignment_balance", "decontamination_recall_eval",
-    # round 6: cross-doc gram coverage (gram-key shuffle), the two
-    # decoded-payload fingerprint joins (pigeonhole candidate growth
-    # is the thing to measure — synthetic clips cluster, so expect
-    # super-linear pair counts with near-linear per-pair cost), the
-    # cross-modal composition, the distributed global rank, and the
-    # interval anti-join
-    "duplicate_gram_coverage", "image_phash_near_dup",
-    "audio_fingerprint_near_dup", "multimodal_curation_pipeline",
-    "curriculum_order", "unattributed_purchases",
-    "gopher_quality_rules", "source_epoch_plan",
-    # round-6 fifth wave: the hashed-unigram model build+apply, the
-    # in-row source-pair expansion, the distributed vocab rank, the
-    # PQ assignment (corpus x MxK broadcast) and its ADC search, and
-    # the prefix-cosine probe sweep — each one scan-shaped by
-    # construction; the smoke verifies none hides a super-linear term
-    "dsir_importance_weights", "cross_source_dup_matrix",
-    "vocab_coverage_curve", "hard_negative_mining",
-    "pq_codebook_assign", "pq_adc_recall_eval",
-    "matryoshka_truncation_eval", "token_frequency_spectrum",
-    # exact quantile normalization: per-source windows + the
-    # rank->value equi-join against the range-partitioned global
-    # rank — the window-vs-join balance is what to watch at 10x
-    "quantile_normalize_doclen", "packing_efficiency_report",
-    # round-6 sixth wave: the single-exchange point-in-time feature
-    # assembly and the five-term join-IVM certificate (five scans +
-    # five equi-joins — the term that grows is the full join itself)
-    "leakage_free_training_set", "join_ivm_delta_check",
-    "audience_overlap_sketch", "content_defined_chunk_dedup",
-    # round 7: the de-single-tasked global order statistics (three
-    # distributed rank passes + closed-form ntile; TakeOrdered top-k;
-    # broadcast scalar cuts) and the window-dedup'd indicators — the
-    # shapes whose 10x ratio proves the rewrite removed the
-    # single-task term rather than hiding it
-    "rfm_segmentation", "revenue_concentration", "corpus_top_terms",
-    "important_parts", "bollinger20", "williams_r",
-    "stochastic_14_3", "rolling_beta20",
-    # round-7 second wave: the group-capped windows migrated to the
-    # grouped prefix decomposition — ratios prove the |groups|-task
-    # ceiling is gone, not moved
-    "doc_pack_sequences", "value_rank_family", "value_ntile_features",
-    "doc_token_budget_sample",
-    # round 8: the df-capped containment index (the cap is what keeps
-    # the shingle self-join sub-quadratic — the ratio to watch), the
-    # KS grid (value-domain x |sources|, should be scan-dominated),
-    # and the new scan-shaped corpus statistics
-    "snippet_containment_pairs", "containment_recall_eval",
-    "ks_drift_by_source", "kfold_assignment_report",
-    "bm25_topk_docs", "source_log_odds_terms",
-    "tokenizer_fertility_by_lang",
-    # rebuilt round 8 on the inverted index (was quadratic in group
-    # size — the sf1 sweep measured hours at 2.5k-doc source groups);
-    # the ratio proves the fix removed the quadratic term
-    "doc_ngram_jaccard",
-    # round 8b: governance/planner/recommender wave — the estimator
-    # and skew report are scan-shaped by design (|keys| / |buckets|
-    # exchanges), the CF join is df-capped, the leakage audit rides
-    # the containment index, Hill is a TakeOrdered
-    "k_anonymity_report", "split_leakage_audit",
-    "join_cardinality_estimate", "code_detect_eval",
-    "hill_tail_index", "customer_cf_neighbors",
-    "popularity_rec_hitrate", "hash_partition_skew_report",
-    # round 9: the wave-10 curation-economics queries (scan-shaped or
-    # candidate-bounded by construction — the smoke verifies it), the
-    # newly bucket-capped keeper-chain cluster stats, and the LSH
-    # precision harness (exact verify over LSH-bounded candidates)
-    "lsh_precision_sample", "domain_cap_enforcement",
-    "chunk_stride_plan", "freshness_decay_weights",
-    "lsh_band_churn", "dedup_token_savings",
-    "dup_cluster_size_stats",
-    "file_compaction_plan", "quality_keeper_selection",
-    "score_decile_lift",
-]
-
-# SPARK_SMOKE_ONLY=q1,q2 restricts the run (fast iteration on a new
-# operator without re-measuring the whole suite)
-_only = os.environ.get("SPARK_SMOKE_ONLY")
-if _only:
-    QUERIES = [q for q in QUERIES if q in set(_only.split(","))]
 
 
 def _rotate_text(col, i):
@@ -379,47 +236,3 @@ def build_big_dir(
                 "overwrite"
             ).parquet(os.path.join(out, f"{dim}.parquet"))
     return out
-
-
-def time_queries(spark, sf_dir: str) -> dict[str, float]:
-    timings = {}
-    for name in QUERIES:
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            REGISTRY[name].builder(spark, sf_dir).collect()
-            el = time.time() - t0
-            best = el if best is None else min(best, el)
-        timings[name] = round(best, 3)
-        print(f"# {sf_dir.split('/')[-1]} {name}: {best:.3f}s", file=sys.stderr)
-    return timings
-
-
-def main() -> None:
-    args = [a for a in sys.argv[1:] if a != "--catalog"]
-    catalog = "--catalog" in sys.argv[1:]
-    n = int(args[0]) if args else 10
-    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("scale-smoke")
-    spark.sparkContext.setLogLevel("ERROR")
-    big = build_big_dir(spark, src, n, catalog_growth=catalog)
-    base = time_queries(spark, src)
-    scaled = time_queries(spark, big)
-    print(
-        json.dumps(
-            {
-                "metric": "scale_smoke",
-                "replication": n,
-                "axis": "catalog_growing" if catalog else "catalog_fixed",
-                "base": base,
-                "scaled": scaled,
-                "ratio": {
-                    q: round(scaled[q] / base[q], 2) for q in QUERIES
-                },
-            }
-        )
-    )
-
-
-if __name__ == "__main__":
-    main()

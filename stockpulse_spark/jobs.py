@@ -31,6 +31,7 @@ from stockpulse_spark.functions.indicators import (
     vwap,
 )
 from stockpulse_spark.operators.quality import clean_bars
+from stockpulse_spark.schemas import BARS_RAW
 from stockpulse_spark.sources.rest_replay import incremental_gate, parse_api_payload
 from stockpulse_spark.sources.sinks import write_bronze, write_silver
 from stockpulse_spark.streaming.pipeline import encode_stream_messages
@@ -61,13 +62,26 @@ def ingest_job(
 ) -> DataFrame:
     """REST payloads (symbol, payload json string) → parsed, gated,
     cleaned, derived; bronze + silver written; returns the wire
-    messages the reference would publish (one JSON per bar)."""
+    messages the reference would publish (one JSON per bar).
+
+    The fetch fans out to three actions (bronze write, silver write,
+    the caller's collect of the messages), so the processed bars are
+    computed once with an eager `localCheckpoint()` and every branch
+    reads that. Without it each action re-runs parse → explode → gate
+    → dedup, and the gate's `current_timestamp()` and `last_seen` read
+    (often of the bronze path written here) are evaluated per action,
+    so the three outputs could disagree at the retention boundary.
+    `localCheckpoint` rather than `persist()`: the returned messages
+    are lazy and collected by the caller, so no one here could
+    `unpersist()`; the ContextCleaner frees the blocks once the frame
+    is dropped. Trade-off: the blocks live on executors only, so an
+    executor loss fails the job instead of recomputing from lineage."""
     bars = parse_api_payload(payloads)
     if last_seen is not None:
         bars = incremental_gate(bars, last_seen, retention_days=retention_days)
     bars = clean_bars(bars, key_cols=["symbol", "timestamp"])
-    write_bronze(bars, bronze_path)
-    processed = derive_processed(bars)
+    processed = derive_processed(bars).localCheckpoint()
+    write_bronze(processed.select(BARS_RAW.fieldNames()), bronze_path)
     write_silver(processed, silver_path)
     return encode_stream_messages(processed)
 

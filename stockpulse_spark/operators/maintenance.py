@@ -30,13 +30,11 @@ def compact(
 ) -> int:
     """Rewrite a parquet dataset into ~target-sized files, written to
     `path + "__compacted"` (atomic swap is the deployment's mv/rename).
-    Returns the target output file count."""
-    import os
-
+    Returns the target output file count. The input is sized from the
+    relation's plan statistics (the file index's byte total), so any
+    Hadoop filesystem works, not just local paths."""
     df = spark.read.parquet(path)
-    est_bytes = sum(
-        os.path.getsize(f.removeprefix("file:")) for f in df.inputFiles()
-    )
+    est_bytes = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     n_files = max(1, round(est_bytes / target_file_bytes))
     (
         df.repartition(n_files, *partition_cols)

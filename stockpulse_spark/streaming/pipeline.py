@@ -28,7 +28,7 @@ from stockpulse_spark.functions.nullsafe import max_by_nn, min_by_nn
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from stockpulse_spark.schemas import STREAM_MESSAGE
+from stockpulse_spark.schemas import BARS_RAW, STREAM_MESSAGE
 
 
 def encode_stream_messages(df: DataFrame) -> DataFrame:
@@ -108,24 +108,31 @@ def dual_sink_writer(raw_path: str, processed_path: str):
     foreachBatch + checkpoint gives at-least-once into idempotent
     parquet appends; with a MERGE-capable sink (Delta/Iceberg) the same
     hook is exactly-once.
+
+    The batch is persisted around the two writes: unpersisted, each
+    write re-runs the micro-batch plan, stateful dedup included, which
+    doubles the state rows and dropped-duplicate counts the query
+    reports. Unpersisted in `finally`, so a failed write frees it too.
     """
     from pyspark.sql import Window
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        raw_cols = ["timestamp", "symbol", "open", "high", "low", "close", "volume"]
-        batch.select(*[c for c in raw_cols if c in batch.columns]).write.mode(
-            "append"
-        ).parquet(raw_path)
-
         w = Window.partitionBy("symbol", F.to_date("timestamp")).orderBy("timestamp")
-        processed = batch.select(
-            "*",
-            F.avg("close").over(w.rowsBetween(-4, 0)).alias("ma5_batch"),
-            F.avg("close")
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("cma_batch"),
-        )
-        processed.write.mode("append").parquet(processed_path)
+        batch.persist()
+        try:
+            batch.select(
+                *[c for c in BARS_RAW.fieldNames() if c in batch.columns]
+            ).write.mode("append").parquet(raw_path)
+            processed = batch.select(
+                "*",
+                F.avg("close").over(w.rowsBetween(-4, 0)).alias("ma5_batch"),
+                F.avg("close")
+                .over(w.rowsBetween(Window.unboundedPreceding, 0))
+                .alias("cma_batch"),
+            )
+            processed.write.mode("append").parquet(processed_path)
+        finally:
+            batch.unpersist()
 
     return write_batch
 

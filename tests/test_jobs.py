@@ -4,11 +4,13 @@ mirroring the reference's full pipeline on an F4-shaped fixture."""
 from __future__ import annotations
 
 import json
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
 from stockpulse_spark.jobs import analytics_job, ingest_job
+from tests.conftest import executed_plan
 
 
 def _payload(bars: dict[str, float]) -> str:
@@ -75,3 +77,42 @@ def test_ingest_gate_skips_stale(spark, tmp_path):
     )
     msgs = [json.loads(r["value"]) for r in out.collect()]
     assert len(msgs) == 1 and msgs[0]["timestamp"] == "2024-01-02 09:35:00"
+
+
+def test_ingest_two_cycles_computes_once(spark, tmp_path):
+    """A fetch, then an overlapping sweep gated on the bronze path the
+    job appends to: each output carries exactly the new bars, and the
+    returned messages read the materialized frame, not the parse."""
+    t0 = datetime.now(timezone.utc).replace(tzinfo=None, microsecond=0) - timedelta(days=2)
+    stamps = [(t0 + timedelta(minutes=5 * i)).strftime("%Y-%m-%d %H:%M:%S") for i in range(8)]
+    old, new = stamps[:6], stamps[6:]
+    symbols = ("AAPL", "MSFT")
+    bronze, silver = str(tmp_path / "bronze"), str(tmp_path / "silver")
+
+    def fetch(ts: list[str]):
+        return spark.createDataFrame(
+            [(s, _payload({t: 100.0 + i for i, t in enumerate(ts)})) for s in symbols],
+            "symbol string, payload string",
+        )
+
+    def keys(df) -> list[tuple[str, str]]:
+        return sorted(
+            (r[0], r[1]) for r in df.select(
+                "symbol", F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss")
+            ).collect()
+        )
+
+    ingest_job(fetch(old), None, bronze, silver).collect()
+    before = {p: keys(spark.read.parquet(p)) for p in (bronze, silver)}
+    last_seen = (
+        spark.read.parquet(bronze).groupBy("symbol").agg(F.max("timestamp").alias("max_ts"))
+    )
+    out = ingest_job(fetch(old[2:] + new), last_seen, bronze, silver)
+
+    expected = sorted((s, t) for s in symbols for t in new)
+    msgs = [json.loads(r["value"]) for r in out.collect()]
+    assert sorted((m["symbol"], m["timestamp"]) for m in msgs) == expected
+    for p in (bronze, silver):
+        assert keys(spark.read.parquet(p)) == sorted(before[p] + expected)
+    plan = executed_plan(spark, out)
+    assert "from_json" not in plan and "Generate" not in plan

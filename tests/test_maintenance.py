@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,6 +33,17 @@ def test_compact_reduces_files(spark, fragmented):
     after = len(out.inputFiles())
     assert out.count() == spark.read.parquet(fragmented).count()
     assert after < before
+
+
+def test_compact_file_count_matches_local_file_sizes(spark, fragmented):
+    """On a local dataset the plan-statistics size equals the summed
+    file sizes, so the target count is the one they give."""
+    target = 1024
+    files = spark.read.parquet(fragmented).inputFiles()
+    local_bytes = sum(os.path.getsize(f.removeprefix("file:")) for f in files)
+    expected = max(1, round(local_bytes / target))
+    assert expected > 1
+    assert compact(spark, fragmented, target_file_bytes=target) == expected
 
 
 def test_dedup_rewrite(spark, tmp_path, fragmented):

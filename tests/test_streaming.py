@@ -69,6 +69,12 @@ def test_dedup_and_dual_sink(spark, stream_dirs):
         .collect()[0]
     )
     assert row["ma5_batch"] == pytest.approx((100.0 + 101.0) / 2)
+    # the dual sink reads one persisted batch, so the stateful dedup
+    # runs once per micro-batch: 3 state rows, 1 dropped redelivery
+    (data,) = [json.loads(p.json) for p in q.recentProgress if p.numInputRows > 0]
+    state = data["stateOperators"][0]
+    assert state["numRowsTotal"] == 3
+    assert state["customMetrics"]["numDroppedDuplicateRows"] == 1
 
 
 def test_checkpoint_restart_no_reprocess(spark, stream_dirs):

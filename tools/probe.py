@@ -6,7 +6,8 @@ median seconds of both actions (collect cost is collect minus noop),
 the row count, the engine counters of the last noop round's job group
 (jobs, stages, tasks, shuffle read/write, input and spill bytes, read
 from the in-process status store once the listener bus drains, so the
-Spark UI stays off) and the shuffle-exchange count of the final plan.
+Spark UI stays off), the shuffle-exchange count of the final plan and
+the Janino compilations that noop round made.
 
 Usage:
     python tools/probe.py [--sf DIR] [--scale N [--catalog]] [--runs K]
@@ -31,6 +32,8 @@ import sys
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
+
+from py4j.protocol import Py4JJavaError
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -361,7 +364,13 @@ def engine_counters(sc, group: str) -> dict[str, int]:
             if stage in seen:
                 continue
             seen.add(stage)
-            data = store.lastStageAttempt(stage)
+            try:
+                data = store.lastStageAttempt(stage)
+            except Py4JJavaError:
+                # past spark.ui.retainedStages the store trims stages in
+                # completion-time order, and a skipped stage never
+                # completed, so it is trimmed first, even in a long sweep
+                continue
             if data.status().toString() == "SKIPPED":
                 continue
             out["stages"] += 1
@@ -389,6 +398,13 @@ def exchange_count(plan) -> int:
     )
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compilations this JVM has made so far (a timed round that
+    compiled is measuring codegen, not the query)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def profile(spark, name: str, sf_dir: str, runs: int = 3,
             plan_path: str | None = None) -> dict:
     """One record for registry query `name` at `sf_dir` (see module doc).
@@ -401,9 +417,11 @@ def profile(spark, name: str, sf_dir: str, runs: int = 3,
         for i in range(runs):
             group = f"probe:{name}:{i}"
             sc.setJobGroup(group, f"{name} noop")
+            compiled = codegen_compiles(spark)
             t0 = time.perf_counter()
             build(spark, sf_dir).write.format("noop").mode("overwrite").save()
             noop.append(time.perf_counter() - t0)
+            compiled = codegen_compiles(spark) - compiled
             sc.setJobGroup(f"{group}:collect", f"{name} collect")
             t0 = time.perf_counter()
             df = build(spark, sf_dir)
@@ -424,6 +442,7 @@ def profile(spark, name: str, sf_dir: str, runs: int = 3,
         "rows": rows,
         **engine_counters(sc, group),
         "exchanges": exchange_count(qe.executedPlan()),
+        "codegen_compiles": compiled,
     }
 
 

@@ -1,5 +1,5 @@
 """Corpus-sized fingerprint-width machinery shared by the multimodal
-near-dup cells (audio: registry_multimodal4, image: registry_multimodal3).
+near-dup cells in plans/multimodal.py (audio and image fingerprints).
 
 The round-9 audio `weak` mark was a FIXED per-band key space (256 keys
 forever => candidates Theta(n^2/256) on any corpus).  The fix that

@@ -1,87 +1,16 @@
 from stockpulse_spark.plans.registry import REGISTRY, QuerySpec, queries, oracle_sql
 
-# importing these modules populates REGISTRY
-from stockpulse_spark.plans import registry_indicators  # noqa: F401, E402
-from stockpulse_spark.plans import registry_calendar  # noqa: F401, E402
-from stockpulse_spark.plans import registry_llmdata  # noqa: F401, E402
-from stockpulse_spark.plans import registry_misc  # noqa: F401, E402
-from stockpulse_spark.plans import registry_panel  # noqa: F401, E402
-from stockpulse_spark.plans import registry_streaming  # noqa: F401, E402
-from stockpulse_spark.plans import registry_asof  # noqa: F401, E402
-from stockpulse_spark.plans import registry_funnel  # noqa: F401, E402
-from stockpulse_spark.plans import registry_sessions  # noqa: F401, E402
-from stockpulse_spark.plans import registry_subqueries  # noqa: F401, E402
-from stockpulse_spark.plans import registry_extras  # noqa: F401, E402
-from stockpulse_spark.plans import registry_sqlapi  # noqa: F401, E402
-from stockpulse_spark.plans import registry_indicators2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_tfidf  # noqa: F401, E402
-from stockpulse_spark.plans import registry_llmpipe  # noqa: F401, E402
-from stockpulse_spark.plans import registry_relops  # noqa: F401, E402
-from stockpulse_spark.plans import registry_analytics  # noqa: F401, E402
-from stockpulse_spark.plans import registry_tpch2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_bloom  # noqa: F401, E402
-from stockpulse_spark.plans import registry_warehouse  # noqa: F401, E402
-from stockpulse_spark.plans import registry_analytics2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_relops3  # noqa: F401, E402
-from stockpulse_spark.plans import registry_ml  # noqa: F401, E402
-from stockpulse_spark.plans import registry_analytics3  # noqa: F401, E402
-from stockpulse_spark.plans import registry_tpch3  # noqa: F401, E402
-from stockpulse_spark.plans import registry_tpch4  # noqa: F401, E402
-from stockpulse_spark.plans import registry_corpus2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_mmr  # noqa: F401, E402
-from stockpulse_spark.plans import registry_attrib  # noqa: F401, E402
-from stockpulse_spark.plans import registry_seasonal  # noqa: F401, E402
-from stockpulse_spark.plans import registry_curation3  # noqa: F401, E402
-from stockpulse_spark.plans import registry_layout  # noqa: F401, E402
-from stockpulse_spark.plans import registry_funnel2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_growth  # noqa: F401, E402
-from stockpulse_spark.plans import registry_analytics4  # noqa: F401, E402
-from stockpulse_spark.plans import registry_paths  # noqa: F401, E402
-from stockpulse_spark.plans import registry_tpch5  # noqa: F401, E402
-from stockpulse_spark.plans import registry_risk  # noqa: F401, E402
-from stockpulse_spark.plans import registry_pii  # noqa: F401, E402
-from stockpulse_spark.plans import registry_graph  # noqa: F401, E402
-from stockpulse_spark.plans import registry_streaming3  # noqa: F401, E402
-from stockpulse_spark.plans import registry_streaming2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_ml2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_profile  # noqa: F401, E402
-from stockpulse_spark.plans import registry_cohort  # noqa: F401, E402
-from stockpulse_spark.plans import registry_multimodal2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_decompose  # noqa: F401, E402
-from stockpulse_spark.plans import registry_tokenizer  # noqa: F401, E402
-from stockpulse_spark.plans import registry_cdc  # noqa: F401, E402
-from stockpulse_spark.plans import registry_statespace  # noqa: F401, E402
-from stockpulse_spark.plans import registry_robust  # noqa: F401, E402
-from stockpulse_spark.plans import registry_survival  # noqa: F401, E402
-from stockpulse_spark.plans import registry_mlstats  # noqa: F401, E402
-from stockpulse_spark.plans import registry_inference  # noqa: F401, E402
-from stockpulse_spark.plans import registry_dq  # noqa: F401, E402
-from stockpulse_spark.plans import registry_streaming4  # noqa: F401, E402
-from stockpulse_spark.plans import registry_dtw  # noqa: F401, E402
-from stockpulse_spark.plans import registry_features  # noqa: F401, E402
-from stockpulse_spark.plans import registry_features2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_bursts  # noqa: F401, E402
-from stockpulse_spark.plans import registry_linededup  # noqa: F401, E402
-from stockpulse_spark.plans import registry_curation4  # noqa: F401, E402
-from stockpulse_spark.plans import registry_streaming5  # noqa: F401, E402
-from stockpulse_spark.plans import registry_multimodal3  # noqa: F401, E402
-from stockpulse_spark.plans import registry_mixture  # noqa: F401, E402
-from stockpulse_spark.plans import registry_multimodal4  # noqa: F401, E402
-from stockpulse_spark.plans import registry_multimodal5  # noqa: F401, E402
-from stockpulse_spark.plans import registry_streaming6  # noqa: F401, E402
-from stockpulse_spark.plans import registry_curation5  # noqa: F401, E402
-from stockpulse_spark.plans import registry_pq  # noqa: F401, E402
-from stockpulse_spark.plans import registry_vectoreval  # noqa: F401, E402
-from stockpulse_spark.plans import registry_calibration  # noqa: F401, E402
-from stockpulse_spark.plans import registry_featurestore  # noqa: F401, E402
-from stockpulse_spark.plans import registry_joinivm  # noqa: F401, E402
-from stockpulse_spark.plans import registry_skewjoin  # noqa: F401, E402
-from stockpulse_spark.plans import registry_sketches  # noqa: F401, E402
-from stockpulse_spark.plans import registry_cdc2  # noqa: F401, E402
-from stockpulse_spark.plans import registry_wave8  # noqa: F401, E402
-from stockpulse_spark.plans import registry_wave9  # noqa: F401, E402
-from stockpulse_spark.plans import registry_wave10  # noqa: F401, E402
-from stockpulse_spark.plans import registry_recsys  # noqa: F401, E402
-from stockpulse_spark.plans import registry_streaming7  # noqa: F401, E402
+# importing the domain modules populates REGISTRY
+from stockpulse_spark.plans import relational  # noqa: F401, E402
+from stockpulse_spark.plans import timeseries  # noqa: F401, E402
+from stockpulse_spark.plans import text_curation  # noqa: F401, E402
+from stockpulse_spark.plans import vectors  # noqa: F401, E402
+from stockpulse_spark.plans import text_dedup  # noqa: F401, E402
+from stockpulse_spark.plans import asof  # noqa: F401, E402
+from stockpulse_spark.plans import streaming  # noqa: F401, E402
+from stockpulse_spark.plans import multimodal  # noqa: F401, E402
+from stockpulse_spark.plans import graph  # noqa: F401, E402
+from stockpulse_spark.plans import stats_ml  # noqa: F401, E402
+from stockpulse_spark.plans import warehouse  # noqa: F401, E402
 
 __all__ = ["REGISTRY", "QuerySpec", "queries", "oracle_sql"]

@@ -11,11 +11,12 @@ hash at sf0.01. Therefore:
 - window orderings are always over unique keys (ts is unique per
   user_id in the testdata; tiebreaks added where it matters).
 
-The `events` table is the OHLCV stand-in (FIXTURES.md F6):
-partition = user_id ↔ symbol, order = ts ↔ timestamp,
-measure = value ↔ close. Indicator kernels that need the full OHLCV
-shape run over pseudo-bars derived by hourly resample (open/high/low/
-close/volume = first/max/min/last/count of value per user-hour).
+This module holds only the plumbing: `QuerySpec`, `REGISTRY`, the
+`_register` decorator, the driver-window order and the rounding and
+table-load helpers. The queries live in one module per domain
+(relational, timeseries, text_curation, vectors, text_dedup, asof,
+streaming, multimodal, graph, stats_ml, warehouse); importing
+`stockpulse_spark.plans` registers all of them.
 """
 
 from __future__ import annotations
@@ -23,10 +24,8 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from stockpulse_spark.functions.nullsafe import max_by_nn, min_by_nn, nan_nn, not_finite
 
 from stockpulse_spark.sources.tables import load_table
 
@@ -223,613 +222,3 @@ def _r2(c: Column) -> Column:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-# ---------------------------------------------------------------------------
-# pseudo-OHLCV bars from `events` (shared by the indicator queries)
-#
-# (user_id, ts) is unique in the testdata, so min_by/max_by over ts is
-# deterministic. One shuffle on (user_id, hour-bucket); at scale this is
-# the same tumbling-window agg used by the streaming path.
-
-_BARS_CTE = """
-WITH bars AS (
-  -- HAVING: an hour with no non-NULL price forms no bar (arg_max
-  -- skips NULLs, so close IS NULL <=> every value in the bucket was
-  -- NULL); a NULL bar inside a recursive kernel (EMA/MACD) would
-  -- poison the rest of the series in one engine and not the other.
-  -- NaN ticks are sensor garbage, not trades: masked like NULL at
-  -- the bar boundary (DuckDB's stddev RAISES on NaN input while
-  -- Spark returns NaN, so a NaN entering any bar would shear every
-  -- downstream moment aggregate between engines).
-  SELECT
-    user_id,
-    date_trunc('hour', ts) AS bucket_start,
-    first(value ORDER BY ts, value) FILTER (WHERE value IS NOT NULL AND isfinite(value))     AS open,
-    max(value) FILTER (WHERE isfinite(value))             AS high,
-    min(value) FILTER (WHERE isfinite(value))             AS low,
-    last(value ORDER BY ts, value) FILTER (WHERE value IS NOT NULL AND isfinite(value))     AS close,
-    count(*)               AS volume
-  FROM events
-  GROUP BY user_id, date_trunc('hour', ts)
-  HAVING last(value ORDER BY ts, value) FILTER (WHERE value IS NOT NULL AND isfinite(value)) IS NOT NULL
-)
-"""
-
-
-def _hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NaN mask projected ONCE before the groupBy: inlining nan_nn into
-    # each of the four aggregates re-evaluates the CASE per aggregate
-    # per row on the SortAggregate path (struct-keyed min_by/max_by),
-    # measured +20-30% on the bar pass at sf0.1 (round-6 regression).
-    ev = _t(spark, sf_dir, "events").withColumn("__v", nan_nn("value"))
-    return (
-        ev.groupBy(
-            "user_id", F.date_trunc("hour", F.col("ts")).alias("bucket_start")
-        )
-        .agg(
-            min_by_nn("__v", "ts").alias("open"),
-            F.max("__v").alias("high"),
-            F.min("__v").alias("low"),
-            max_by_nn("__v", "ts").alias("close"),
-            F.count(F.lit(1)).alias("volume"),
-        )
-        # mirror the oracle's HAVING: no bar for an all-NULL hour
-        .filter(F.col("close").isNotNull())
-    )
-
-
-# ===========================================================================
-# Relational core — scan/filter/agg/join shapes that dominate at 100 TB
-# ===========================================================================
-
-
-@_register(
-    "pricing_summary",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           ROUND(SUM(l_quantity), 4)                              AS sum_qty,
-           ROUND(SUM(l_extendedprice), 4)                         AS sum_base_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 4)      AS sum_disc_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4) AS sum_charge,
-           ROUND(AVG(l_quantity), 6)                              AS avg_qty,
-           ROUND(AVG(l_extendedprice), 6)                         AS avg_price,
-           ROUND(AVG(l_discount), 6)                              AS avg_disc,
-           COUNT(*)                                               AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-    """,
-    headline=True,
-    tags=("agg", "scan"),
-    doc="TPC-H Q1 shape: full scan + grouped partial aggregation. The "
-    "filter and 7-column projection push into the parquet scan.",
-)
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            _r4(F.sum("l_quantity")).alias("sum_qty"),
-            _r4(F.sum("l_extendedprice")).alias("sum_base_price"),
-            _r4(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("sum_disc_price"),
-            _r4(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                )
-            ).alias("sum_charge"),
-            _r6(F.avg("l_quantity")).alias("avg_qty"),
-            _r6(F.avg("l_extendedprice")).alias("avg_price"),
-            _r6(F.avg("l_discount")).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-@_register(
-    "revenue_by_nation",
-    oracle="""
-    SELECT n.n_name AS nation,
-           ROUND(SUM(CASE WHEN isfinite(l.l_extendedprice)
-                           AND isfinite(l.l_discount)
-                     THEN CAST(round(l.l_extendedprice * 100) AS BIGINT)
-                          * (100 - CAST(round(l.l_discount * 100) AS BIGINT))
-                     END) / 10000.0, 4) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem l
-    JOIN orders o    ON l.l_orderkey = o.o_orderkey
-    JOIN customer c  ON o.o_custkey = c.c_custkey
-    JOIN nation n    ON c.c_nationkey = n.n_nationkey
-    JOIN region r    ON n.n_regionkey = r.r_regionkey
-    GROUP BY n.n_name
-    ORDER BY revenue DESC, nation
-    """,
-    headline=True,
-    tags=("join", "agg"),
-    doc="5-way star join. nation/region/customer are broadcast (small "
-    "dims); only lineitem⋈orders shuffles — at 100 TB that is the one "
-    "unavoidable exchange, co-locatable via bucketing on orderkey. "
-    "Revenue sums in exact integer ten-thousandths (price is "
-    "cents-valued, discount percent-valued), so the aggregate is "
-    "summation-order-independent — the round-8 sf1 sweep caught the "
-    "float SUM landing within 1 ulp of a .5 rounding boundary at 10x "
-    "data, where Spark's and DuckDB's different partial-sum orders "
-    "rendered different 4th decimals.  Exact-decimal money aggregation "
-    "is also the correct posture at 100 TB: a billion-row float sum "
-    "drifts by summation ORDER, i.e. by partitioning, run to run.  "
-    "Non-finite money masks like NULL (the engine-wide nan_nn "
-    "contract — the integer snap would CAST_OVERFLOW on it anyway).",
-)
-def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rev_1e4 = F.when(
-        ~not_finite("l_extendedprice") & ~not_finite("l_discount"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint")
-        * (100 - F.round(F.col("l_discount") * 100).cast("bigint")),
-    )
-    # the money product is computed in the lineitem SCAN projection,
-    # below the orderkey shuffle: the exchange then carries one BIGINT
-    # per row instead of two doubles, and the per-row rounds/multiplies
-    # run in the scan stage (round-8 verdict item 5 — the exact-integer
-    # rewrite had left them above the 5-way join)
-    l = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", rev_1e4.alias("rev_1e4")
-    )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            _r4(F.sum("rev_1e4") / 10000.0).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.col("revenue").desc(), "nation")
-    )
-
-
-@_register(
-    "top_customers",
-    oracle="""
-    SELECT c.c_custkey, c.c_name,
-           ROUND(SUM(o.o_totalprice), 4) AS total_spent,
-           COUNT(*) AS n_orders
-    FROM customer c
-    JOIN orders o ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_name
-    ORDER BY total_spent DESC, c_custkey
-    LIMIT 10
-    """,
-    tags=("join", "agg", "limit"),
-    doc="join + group + deterministic top-k (order by value desc with "
-    "key tiebreak). TakeOrderedAndProject — no full sort at scale.",
-)
-def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            _r4(F.sum("o_totalprice")).alias("total_spent"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy(F.col("total_spent").desc(), "c_custkey")
-        .limit(10)
-    )
-
-
-@_register(
-    "orders_priority_count",
-    oracle="""
-    SELECT o_orderpriority, COUNT(*) AS order_count
-    FROM orders
-    WHERE EXISTS (
-      SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate
-    )
-    GROUP BY o_orderpriority
-    ORDER BY o_orderpriority
-    """,
-    tags=("join", "semi"),
-    doc="semi-join (EXISTS) shape — TPC-H Q4. left_semi avoids "
-    "materializing the probe side.",
-)
-def q_orders_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    matched = o.join(
-        l,
-        (o.o_orderkey == l.l_orderkey) & (l.l_shipdate > o.o_orderdate),
-        "left_semi",
-    )
-    return (
-        matched.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-# ===========================================================================
-# Reference surface — sources/cleaning (P*), dedup (W1/A2/A4), aggs (A*)
-# ===========================================================================
-
-
-@_register(
-    "dedup_keep_latest",
-    oracle="""
-    WITH doubled AS (
-      SELECT * FROM events UNION ALL SELECT * FROM events
-    ), ranked AS (
-      SELECT event_id, ts, user_id, event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-      FROM doubled
-    )
-    SELECT event_id, ts, user_id, event_type, value FROM ranked WHERE rn = 1
-    """,
-    tags=("dedup", "window"),
-    doc="reference W1 (dedup_pipeline.py:31-53): ROW_NUMBER keep-latest "
-    "over a deliberately doubled input. One hash exchange on the key.",
-)
-def q_dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    doubled = ev.unionAll(ev)
-    w = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
-    return (
-        doubled.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-@_register(
-    "duplicate_report",
-    oracle="""
-    WITH doubled AS (
-      SELECT * FROM events UNION ALL SELECT * FROM events
-      UNION ALL SELECT * FROM events WHERE event_type = 'error'
-    )
-    SELECT user_id, ts, COUNT(*) AS duplicate_count
-    FROM doubled
-    GROUP BY user_id, ts
-    HAVING COUNT(*) > 1
-    ORDER BY duplicate_count DESC, user_id, ts
-    """,
-    tags=("dedup", "agg"),
-    doc="reference A4 (docs/duplicates_in_bigquery.md:6-19): GROUP BY "
-    "key HAVING COUNT>1 ORDER BY count DESC.",
-)
-def q_duplicate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    doubled = ev.unionAll(ev).unionAll(ev.filter(F.col("event_type") == "error"))
-    return (
-        doubled.groupBy("user_id", "ts")
-        .agg(F.count(F.lit(1)).alias("duplicate_count"))
-        .filter(F.col("duplicate_count") > 1)
-        .orderBy(F.col("duplicate_count").desc(), "user_id", "ts")
-    )
-
-
-@_register(
-    "quality_clean",
-    oracle="""
-    -- NOT isnan: a NaN price must not pass a quality gate; pinned
-    -- explicitly because the engines disagree on NaN > 0 (Spark
-    -- false, DuckDB true)
-    SELECT event_id, ts, user_id, event_type, value
-    FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL AND user_id IS NOT NULL
-      AND isfinite(value) AND value > 0
-    """,
-    tags=("filter",),
-    doc="reference P9 (preprocessing_pipeline.py:124-135): null drop + "
-    "positivity gate as one pushed-down conjunctive predicate.",
-)
-def q_quality_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    return ev.na.drop(subset=["value", "ts", "user_id"]).filter(
-        ~not_finite("value") & (F.col("value") > 0)
-    )
-
-
-@_register(
-    "project_cast",
-    oracle="""
-    SELECT event_id,
-           CAST(ts AS DATE)                      AS date,
-           strftime(ts, '%H:%M:%S')              AS time,
-           CAST(regexp_replace(event_type, '^[0-9]+\\. ', '') AS VARCHAR) AS event_type_clean,
-           CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
-           ROUND(CAST(value AS DOUBLE), 6)       AS value_d
-    FROM events
-    """,
-    tags=("project", "cast"),
-    doc="reference P2-P5: prefix-strip regexp cast, date/time "
-    "derivation, JSON field extraction, numeric coercion.",
-)
-def q_project_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.to_date("ts").alias("date"),
-        F.date_format("ts", "HH:mm:ss").alias("time"),
-        F.regexp_replace(F.col("event_type"), r"^[0-9]+\. ", "").alias(
-            "event_type_clean"
-        ),
-        F.get_json_object("props", "$.k").cast("int").alias("k"),
-        _r6(F.col("value").cast("double")).alias("value_d"),
-    )
-
-
-@_register(
-    "time_range_filter",
-    oracle="""
-    SELECT event_id, ts, user_id, value
-    FROM events
-    WHERE ts >= (SELECT MAX(ts) FROM events) - INTERVAL 7 DAY
-    """,
-    tags=("filter",),
-    doc="reference P12/S4 (dashboard.py:46, stocks_pipeline.py:146-155): "
-    "retention window relative to the newest row. Scalar agg broadcast, "
-    "then a pushed-down range predicate — no driver collect.",
-)
-def q_time_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    mx = ev.agg(F.max("ts").alias("__mx"))
-    return (
-        ev.crossJoin(F.broadcast(mx))
-        .filter(F.col("ts") >= F.col("__mx") - F.expr("INTERVAL 7 DAYS"))
-        .select("event_id", "ts", "user_id", "value")
-    )
-
-
-@_register(
-    "latest_per_user",
-    oracle="""
-    SELECT user_id,
-           MAX(ts)            AS latest_ts,
-           last(value ORDER BY ts, value) FILTER (WHERE value IS NOT NULL AND isfinite(value)) AS latest_value,
-           COUNT(*)           AS n_events
-    FROM events
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
-    tags=("agg",),
-    doc="reference A1+A5+A9 (stocks_pipeline.py:92-99, "
-    "preprocessing_pipeline.py:164): scalar MAX + last-value-per-key "
-    "via max_by — single partial-aggregated shuffle, no window needed.",
-)
-def q_latest_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.max("ts").alias("latest_ts"),
-            max_by_nn(nan_nn("value"), "ts").alias("latest_value"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .orderBy("user_id")
-    )
-
-
-@_register(
-    "hourly_volume_pivot",
-    oracle="SELECT dayname(ts) AS day_name, "
-    + ", ".join(
-        f"ROUND(COALESCE(AVG(value) FILTER (WHERE hour(ts) = {h}), 0), 6) AS h{h}"
-        for h in range(24)
-    )
-    + " FROM events GROUP BY dayname(ts) ORDER BY day_name",
-    tags=("agg", "pivot"),
-    doc="reference A6 (app/dashboard.py:437-447): day-of-week × hour "
-    "mean heatmap. Expressed as 24 conditional aggregates → ONE "
-    "shuffle, no pivot two-pass.",
-)
-def q_hourly_volume_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    aggs = [
-        F.round(
-            F.coalesce(
-                F.avg(F.when(F.hour("ts") == h, F.col("value"))), F.lit(0.0)
-            ),
-            6,
-        ).alias(f"h{h}")
-        for h in range(24)
-    ]
-    return (
-        ev.groupBy(F.date_format("ts", "EEEE").alias("day_name"))
-        .agg(*aggs)
-        .orderBy("day_name")
-    )
-
-
-@_register(
-    "summary_stats",
-    oracle="""
-    -- NaN measures are masked like NULL (DuckDB STDDEV raises on
-    -- NaN input; Spark returns NaN) — n still counts every row
-    SELECT event_type,
-           ROUND(MIN(v), 6)         AS min_value,
-           ROUND(AVG(v), 6)         AS mean_value,
-           ROUND(MAX(v), 6)         AS max_value,
-           ROUND(STDDEV_SAMP(v), 6) AS std_value,
-           COUNT(*)                 AS n
-    FROM (SELECT event_type,
-                 CASE WHEN NOT isfinite(value) THEN NULL ELSE value END AS v
-          FROM events)
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-    tags=("agg",),
-    doc="reference A7/A8 (dashboard.py:623-639, docs/preprocessing.md:"
-    "77-86): min/mean/max/std summary — one agg, sample std (pandas "
-    "ddof=1).",
-)
-def q_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            _r6(F.min(nan_nn("value"))).alias("min_value"),
-            _r6(F.avg(nan_nn("value"))).alias("mean_value"),
-            _r6(F.max(nan_nn("value"))).alias("max_value"),
-            _r6(F.stddev_samp(nan_nn("value"))).alias("std_value"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@_register(
-    "ohlcv_hourly",
-    oracle=_BARS_CTE
-    + """
-    SELECT user_id, bucket_start,
-           ROUND(open, 6) AS open, ROUND(high, 6) AS high,
-           ROUND(low, 6) AS low, ROUND(close, 6) AS close, volume
-    FROM bars
-    ORDER BY user_id, bucket_start
-    """,
-    headline=True,
-    tags=("agg", "resample"),
-    doc="reference A10/T6 (docs/preprocessing.md:19-33): tumbling-window "
-    "OHLCV resample; deterministic open/close via min_by/max_by on ts. "
-    "Same expression is streaming-valid with a watermark.",
-)
-def q_ohlcv_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bars = _hourly_bars(spark, sf_dir)
-    return bars.select(
-        "user_id",
-        "bucket_start",
-        _r6(F.col("open")).alias("open"),
-        _r6(F.col("high")).alias("high"),
-        _r6(F.col("low")).alias("low"),
-        _r6(F.col("close")).alias("close"),
-        "volume",
-    ).orderBy("user_id", "bucket_start")
-
-
-@_register(
-    "ohlcv_daily",
-    oracle="""
-    SELECT user_id,
-           CAST(ts AS DATE)   AS date,
-           ROUND(first(value ORDER BY ts, value) FILTER (WHERE value IS NOT NULL AND isfinite(value)), 6) AS open,
-           ROUND(max(value), 6)         AS high,
-           ROUND(min(value), 6)         AS low,
-           ROUND(last(value ORDER BY ts, value) FILTER (WHERE value IS NOT NULL AND isfinite(value)), 6) AS close,
-           count(*)                     AS volume
-    FROM events
-    GROUP BY user_id, CAST(ts AS DATE)
-    ORDER BY user_id, date
-    """,
-    tags=("agg", "resample"),
-    doc="daily variant of the OHLCV resample (5min→1D in the reference).",
-)
-def q_ohlcv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", F.to_date("ts").alias("date"))
-        .agg(
-            _r6(min_by_nn(nan_nn("value"), "ts")).alias("open"),
-            _r6(F.max("value")).alias("high"),
-            _r6(F.min("value")).alias("low"),
-            _r6(max_by_nn(nan_nn("value"), "ts")).alias("close"),
-            F.count(F.lit(1)).alias("volume"),
-        )
-        .orderBy("user_id", "date")
-    )
-
-
-# ===========================================================================
-# Window / analytic surface — the heart of the reference (W2-W13)
-# ===========================================================================
-
-
-@_register(
-    "ma5_cma",
-    oracle="""
-    SELECT event_id, user_id, ts, value,
-           ROUND(AVG(value) OVER (
-             PARTITION BY user_id, CAST(ts AS DATE) ORDER BY ts
-             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS moving_average,
-           ROUND(AVG(value) OVER (
-             PARTITION BY user_id, CAST(ts AS DATE) ORDER BY ts
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS cumulative_average
-    FROM events
-    """,
-    headline=True,
-    tags=("window",),
-    doc="reference W2+W3 (data_preprocessor.py:63-70): per-(series,day) "
-    "5-row rolling mean (min_periods=1) + cumulative mean — the "
-    "producer-side derived columns. Both windows share one exchange.",
-)
-def q_ma5_cma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", F.to_date("ts")).orderBy("ts")
-    return ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        _r6(F.avg("value").over(w.rowsBetween(-4, 0))).alias("moving_average"),
-        _r6(
-            F.avg("value").over(w.rowsBetween(Window.unboundedPreceding, 0))
-        ).alias("cumulative_average"),
-    )
-
-
-@_register(
-    "eod_ma5_join",
-    oracle="""
-    WITH eod AS (
-      SELECT user_id, CAST(ts AS DATE) AS date, last(value ORDER BY ts, value) FILTER (WHERE value IS NOT NULL AND isfinite(value)) AS eod_close
-      FROM events GROUP BY user_id, CAST(ts AS DATE)
-    ), eod_ma AS (
-      SELECT user_id, date,
-             AVG(eod_close) OVER (
-               PARTITION BY user_id ORDER BY date
-               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS eod_ma5
-      FROM eod
-    )
-    SELECT e.event_id, e.user_id, e.ts, e.value, ROUND(m.eod_ma5, 6) AS eod_ma5
-    FROM events e
-    LEFT JOIN eod_ma m ON e.user_id = m.user_id AND CAST(e.ts AS DATE) = m.date
-    """,
-    tags=("window", "join"),
-    doc="reference W4+A5+J1 (preprocessing_pipeline.py:163-174): EOD "
-    "close per day → 5-day rolling mean → broadcast-joined back onto "
-    "every intraday row.",
-)
-def q_eod_ma5_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
-    eod = ev.groupBy("user_id", "date").agg(
-        max_by_nn(nan_nn("value"), "ts").alias("eod_close")
-    )
-    w = Window.partitionBy("user_id").orderBy("date").rowsBetween(-4, 0)
-    eod_ma = eod.select(
-        "user_id", "date", F.avg("eod_close").over(w).alias("eod_ma5")
-    )
-    return (
-        ev.join(F.broadcast(eod_ma), ["user_id", "date"], "left")
-        .select(
-            "event_id",
-            "user_id",
-            "ts",
-            "value",
-            _r6(F.col("eod_ma5")).alias("eod_ma5"),
-        )
-    )

@@ -203,11 +203,11 @@ def running_series_stats(stream_df):
 
 # ---------------------------------------------------------------------------
 # streaming Kalman filter: the state-space recursion of
-# plans/registry_statespace.py carried across micro-batches
+# plans/timeseries.py (`kalman_local_level`) carried across micro-batches
 
 KALMAN_STATE_SCHEMA = "n LONG, l DOUBLE, p DOUBLE"
 KALMAN_OUTPUT_SCHEMA = "user_id LONG, n_obs LONG, level DOUBLE, err_var DOUBLE"
-_KF_Q, _KF_R = 0.1, 1.0  # keep in lockstep with registry_statespace
+_KF_Q, _KF_R = 0.1, 1.0  # keep in lockstep with plans/timeseries.py
 
 
 def _kalman_fold(vals, n: int, l, p):

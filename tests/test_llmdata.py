@@ -21,7 +21,7 @@ from stockpulse_spark.llmdata.multimodal import (
 )
 from stockpulse_spark.llmdata.similarity import cosine_topk, srp_lsh_topk
 from stockpulse_spark.plans import REGISTRY
-from stockpulse_spark.plans.registry_llmdata import _mutated_corpus
+from stockpulse_spark.plans.text_dedup import _mutated_corpus
 from stockpulse_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
@@ -263,7 +263,7 @@ def test_doc_chunking_reconstructs_corpus(spark, docs):
     first `stride` words (the non-overlapping prefix) in chunk order
     reassembles every document exactly."""
     from stockpulse_spark.plans import REGISTRY
-    from stockpulse_spark.plans.registry_llmpipe import _STRIDE
+    from stockpulse_spark.plans.text_curation import _STRIDE
 
     chunks = REGISTRY["doc_chunking"].builder(spark, SF_DIR).collect()
     by_doc = {}

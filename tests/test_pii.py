@@ -1,6 +1,6 @@
 """Unit tests for the PII detection/redaction Column operators
 (llmdata/pii.py) on handcrafted edge cases — the corpus-level oracle
-checks live in registry_pii (driver parity gate)."""
+checks live in plans/text_curation.py (driver parity gate)."""
 
 from __future__ import annotations
 

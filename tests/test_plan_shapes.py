@@ -888,3 +888,17 @@ def test_triangles_edge_gate_shuffles_below_threshold(spark, threshold):
     plan = _plan_at_threshold(spark, "copurchase_triangles", threshold)
     assert "BroadcastHashJoin" not in plan
     assert "ShuffledHashJoin" in plan
+
+
+@pytest.mark.parametrize("name", ["copurchase_pagerank", "copurchase_triangles"])
+def test_graph_gates_shuffle_without_footer_stats(spark, monkeypatch, name):
+    """Unreadable footers (an object-store path, an empty dir) give no
+    row count; the gate must then take the shuffled branch and pin it,
+    since an unhinted join over a checkpoint can still auto-broadcast
+    from the size stats the checkpoint keeps from its origin."""
+    import stockpulse_spark.sources.tables as tables
+
+    monkeypatch.setattr(tables, "footer_row_count", lambda sf_dir, name: None)
+    plan = executed_plan(spark, name)
+    assert "BroadcastHashJoin" not in plan
+    assert "ShuffledHashJoin" in plan

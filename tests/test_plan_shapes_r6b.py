@@ -101,7 +101,7 @@ def test_matryoshka_probe_set_broadcasts(spark):
     plan = executed_plan(spark, "matryoshka_truncation_eval")
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan
-    from stockpulse_spark.plans.registry_vectoreval import _truncation_top
+    from stockpulse_spark.plans.vectors import _truncation_top
 
     inner = executed_plan(spark, _truncation_top(spark, SF_DIR))
     assert "CartesianProduct" not in inner
@@ -172,7 +172,7 @@ def test_cdc_chunk_dedup_one_scan_shape(spark):
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "MapInPandas" not in plan
-    from stockpulse_spark.plans.registry_cdc2 import _chunk_groups
+    from stockpulse_spark.plans.text_dedup import _chunk_groups
 
     inner = executed_plan(spark, _chunk_groups(spark, SF_DIR))
     assert "windowspecdefinition(doc_id" in inner

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from stockpulse_spark.plans.registry_sessions import q_sessionize_events
+from stockpulse_spark.plans.relational import q_sessionize_events
 from stockpulse_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 

@@ -66,7 +66,7 @@ def test_timeout_state_survives_checkpoint_restart(spark, tmp_path):
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from stockpulse_spark.plans.registry_streaming6 import (
+    from stockpulse_spark.plans.streaming import (
         _ABANDON_OUT_SCHEMA,
         _ABANDON_STATE_SCHEMA,
         _abandon_fn,

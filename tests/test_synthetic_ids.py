@@ -10,7 +10,9 @@ justification (a namespace that never joins against real ids)."""
 
 from __future__ import annotations
 
+import ast
 import re
+from collections import Counter
 from pathlib import Path
 
 SRC = Path(__file__).resolve().parent.parent / "stockpulse_spark"
@@ -31,32 +33,51 @@ _PATTERN = re.compile(
     r"['\"]?\s*\)*\s*\+\s*(?:F\.lit\(\s*)?[1-9][0-9]{5,}"
 )
 
-#: file -> why its additive offsets are collision-tolerant
+#: (file, top-level definition) -> how many additive offsets it may
+#: hold, and why they are collision-tolerant. Keyed per definition, not
+#: per file: a whole-file exemption on a domain module would also cover
+#: every other query in it.
 ALLOWED = {
     # batch_id is a LABEL namespace: the incremental gate joins on
     # content hashes and band hashes, never on batch_id == doc_id,
     # so a collision cannot alias rows (verdicts key on batch_id
     # alone). The offset only keeps the label readable in tests.
-    "plans/registry_funnel.py",
-    # registry_corpus2.py was removed from this list in round 9: its
-    # decontamination plants migrated to residue-class ids (k=4,
+    # Oracle side (3 SELECT branches) and Spark side (3 selects).
+    ("plans/text_dedup.py", "_BATCH_CTE"): 3,
+    ("plans/text_dedup.py", "q_incremental_dedup_gate"): 3,
+    # the decontamination plants (now in plans/text_dedup.py) left
+    # this list in round 9: they migrated to residue-class ids (k=4,
     # cohort offsets 0-3) for uniformity with the engine-wide scheme.
 }
+
+
+def _owners(src: str) -> dict[int, str]:
+    """line number -> name of the top-level definition spanning it."""
+    out = {}
+    for node in ast.parse(src).body:
+        names = [node.name] if hasattr(node, "name") else [
+            t.id for t in getattr(node, "targets", []) if isinstance(t, ast.Name)
+        ]
+        for line in range(node.lineno, node.end_lineno + 1):
+            out[line] = names[0] if names else ""
+    return out
 
 
 def _hits():
     out = []
     for p in SRC.rglob("*.py"):
         rel = str(p.relative_to(SRC))
-        for i, line in enumerate(p.read_text().splitlines(), 1):
+        src = p.read_text()
+        owners = _owners(src)
+        for i, line in enumerate(src.splitlines(), 1):
             code = line.split("#", 1)[0]
             if _PATTERN.search(code):
-                out.append((rel, i, line.strip()))
+                out.append((rel, owners.get(i, ""), i, line.strip()))
     return out
 
 
 def test_no_additive_id_offsets_outside_allowlist():
-    bad = [(f, i, l) for f, i, l in _hits() if f not in ALLOWED]
+    bad = [h for h in _hits() if (h[0], h[1]) not in ALLOWED]
     assert not bad, (
         "additive synthetic-id offsets found outside the allowlist — "
         "use residue-class ids (k*i + j) instead; collisions at scale "
@@ -65,11 +86,12 @@ def test_no_additive_id_offsets_outside_allowlist():
 
 
 def test_allowlist_entries_still_exist():
-    """An allowlist entry whose file no longer matches is stale —
-    delete it so the gate stays tight."""
-    files_with_hits = {f for f, _, _ in _hits()}
-    stale = ALLOWED - files_with_hits
-    assert not stale, f"stale allowlist entries: {stale}"
+    """Each allowlisted definition must hold exactly its allowed number
+    of offsets: fewer means the entry is stale (tighten it), more means
+    a new offset slipped in under an old justification."""
+    counts = Counter((f, owner) for f, owner, _, _ in _hits())
+    wrong = {k: counts[k] for k, n in ALLOWED.items() if counts[k] != n}
+    assert not wrong, f"allowlist counts no longer match: {wrong}"
 
 
 def test_sweep_fires_on_planted_violation():

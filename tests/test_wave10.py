@@ -7,7 +7,7 @@ engines computing the same wrong thing) still fails."""
 
 from __future__ import annotations
 
-from stockpulse_spark.plans.registry_wave10 import (
+from stockpulse_spark.plans.text_curation import (
     _CHUNK_SIZE,
     _CHUNK_STRIDE,
     _DOMAIN_CAP,

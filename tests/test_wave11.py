@@ -10,7 +10,7 @@ from __future__ import annotations
 import duckdb
 
 from stockpulse_spark.plans import REGISTRY
-from stockpulse_spark.plans.registry_multimodal4 import (
+from stockpulse_spark.llmdata.widths import (
     _W_MAX,
     _W_MIN,
     _width_case_sql,
@@ -42,7 +42,7 @@ def test_fp_width_ladder_python_sql_parity():
 def test_band_bucket_cap_python_sql_parity():
     """The oracle's cap expression (ws CTE) and band_bucket_cap must
     agree — same integer-ceil, same headroom, same clamp behavior."""
-    from stockpulse_spark.plans.registry_multimodal4 import (
+    from stockpulse_spark.llmdata.widths import (
         _CAP_HEADROOM,
         band_bucket_cap,
     )
@@ -142,7 +142,7 @@ def test_audio_width_override_controls_band_width(spark, tmp_path):
     at least somewhere on a 64-doc corpus."""
     rows = [(d + 123_456, f"clip {d}", "en", "s") for d in range(64)]
     write_documents(str(tmp_path), rows)
-    from stockpulse_spark.plans.registry_multimodal4 import (
+    from stockpulse_spark.plans.multimodal import (
         _attach_wav_variants,
         wav_fingerprint_bands,
     )

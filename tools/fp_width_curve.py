@@ -45,7 +45,7 @@ from stockpulse_spark.sources.tables import load_table  # noqa: E402
 
 
 def _audio_keyed(ids, w: int):
-    from stockpulse_spark.plans.registry_multimodal4 import (
+    from stockpulse_spark.plans.multimodal import (
         _NS_MOD,
         _attach_wav_variants,
         wav_fingerprint_bands,
@@ -64,7 +64,7 @@ def _audio_keyed(ids, w: int):
 
 
 def _image_keyed(ids, w: int):
-    from stockpulse_spark.plans.registry_multimodal3 import (
+    from stockpulse_spark.plans.multimodal import (
         _DIMS_MOD,
         _attach_png_variants,
         png_ahash_quarters,

@@ -339,10 +339,7 @@ def query_set(arg: str) -> QuerySet:
     if arg == "all":
         # streaming queries time microbatch scheduling, not plan cost,
         # and hold the session's streaming state
-        return QuerySet(tuple(
-            n for n, s in REGISTRY.items()
-            if "streaming-run" not in s.tags and not n.startswith("stream_")
-        ))
+        return QuerySet(tuple(n for n in REGISTRY if not n.startswith("stream_")))
     if arg in SETS:
         return SETS[arg]
     if arg in REGISTRY:
